@@ -1,6 +1,8 @@
 package graft.kv
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -72,54 +74,73 @@ object StatementParser {
   }
 }
 
-/** A batch KV engine over a `DataFrame[key: string, value: string]`.
+/** A KV engine over a `DataFrame[key: string, value: string]`, shaped
+  * like the reference's LSM state plane (BadgerDB, SURVEY.md:123): a
+  * GET reads the memtable first and then one sorted level.
   *
-  * Scale design: applying a batch of N statements is ONE distributed
-  * merge — the statements become a small DataFrame, last-write-wins per
-  * key is a window over that (tiny) side, and the merge into the
-  * (potentially huge, 100 TB-scale) state table is a broadcast
-  * left-anti join (drop touched keys) plus a union of the SET rows —
-  * no per-statement pass over the state, no driver-side loop over
-  * state rows, and no shuffle of the state side.
+  *  - `base` is a compacted leaf DataFrame: the initial state, a
+  *    [[replaceState]] restore, or the `localCheckpoint` of the last
+  *    compaction.
+  *  - The memtable is a driver-side immutable `Map[key,
+  *    Option[value]]` of the writes since the last compaction (None is
+  *    a tombstone). [[execute]] resolves last-write-wins into it and
+  *    builds no plan.
+  *  - Every `compactEvery` write batches, ONE [[KvEngine.applyBatch]]
+  *    merge of the memtable into `base` runs, followed by
+  *    `localCheckpoint`. [[state]] is the same merge, built lazily and
+  *    cached until the next write, so its plan holds at most one
+  *    broadcast anti-join + union above a leaf at any depth.
+  *  - [[lookup]] and [[query]] answer a memtable hit with no Spark
+  *    plan. A miss filters `base` directly: one scan at any depth.
+  *
+  * Driver memory: the memtable holds the distinct keys of at most
+  * `compactEvery` statement batches. Bulk writes (`/db/load?merge`)
+  * go through `execute(stmts, compact = true)`, which folds them and
+  * the memtable into `base` in one compaction instead of parking them
+  * in the memtable.
+  *
+  * localCheckpoint is deliberate (r11 verdict): the KV state is small,
+  * driver-adjacent, and rebuilt from the statement log on any failure,
+  * so a reliable-FS checkpoint per compaction would be pure overhead.
+  * Superseded checkpoints are reclaimed by Spark's ContextCleaner once
+  * unreferenced. The shared analytics subtrees use [[graft.queries
+  * .Reuse]] instead, where executor loss must not kill queries.
+  *
+  * Thread safety: writers serialize on the engine's own lock; every
+  * read takes one immutable snapshot of (base, memtable) and never
+  * waits for a writer, not even for a compaction. All methods are safe
+  * from any thread.
   */
-final class KvEngine(spark: SparkSession, initial: DataFrame,
+final class KvEngine(val spark: SparkSession, initial: DataFrame,
     compactEvery: Int = 32) {
   import KvEngine._
   require(compactEvery > 0, "compactEvery must be positive")
 
-  private var stateDf: DataFrame = initial.select(
-    col("key").cast(StringType), col("value").cast(StringType))
-  private var batchesSinceCompact = 0
+  private[this] val writeLock = new Object
+  @volatile private[this] var snap = new Snapshot(leaf(initial), Map.empty, 0)
 
-  def state: DataFrame = stateDf
+  /** The full state: `base` with the memtable merged in. */
+  def state: DataFrame = snap.state
 
   /** Apply SET/DELETE statements (last-write-wins within the batch) and
     * return one ExecResult per statement, in order. GETs embedded in the
-    * batch are rejected like the reference's Execute path. */
-  def execute(stmts: Seq[Statement]): Seq[ExecResult] = {
-    val writes = stmts.collect {
-      case s: SetStmt    => s: Statement
-      case d: DeleteStmt => d: Statement
-    }
-    if (writes.nonEmpty) {
-      stateDf = applyBatch(spark, stateDf, writes)
-      // Each batch deepens the plan by an anti-join + union; a
-      // long-lived session applying thousands of batches would re-plan
-      // an ever-growing tree (and re-execute it per query). Compact via
-      // localCheckpoint every `compactEvery` batches: materializes the
-      // current state as cached blocks and resets lineage to a leaf.
-      // Superseded checkpoints are dropped here and reclaimed by
-      // Spark's ContextCleaner once unreferenced. localCheckpoint is
-      // deliberate here (r11 verdict): the KV state is tiny, driver-
-      // adjacent, and rebuilt from the statement log on any failure —
-      // a reliable-FS checkpoint per compaction would be pure
-      // overhead. The shared analytics subtrees use [[graft.queries
-      // .Reuse]] instead, where executor loss must not kill queries.
-      batchesSinceCompact += 1
-      if (batchesSinceCompact >= compactEvery) {
-        stateDf = stateDf.localCheckpoint(true)
-        batchesSinceCompact = 0
+    * batch are rejected like the reference's Execute path. With
+    * `compact`, the memtable and these writes fold into `base` now, in
+    * one compaction, whatever the batch count. */
+  def execute(stmts: Seq[Statement], compact: Boolean = false): Seq[ExecResult] = {
+    val hasWrites = stmts.exists(!_.isInstanceOf[GetStmt])
+    if (hasWrites || compact) writeLock.synchronized {
+      val s = snap
+      val mem = stmts.foldLeft(s.mem) {
+        case (m, SetStmt(k, v))  => m.updated(k, Some(v))
+        case (m, DeleteStmt(k))  => m.updated(k, None)
+        case (m, _: GetStmt)     => m
       }
+      val next = new Snapshot(s.base, mem,
+        s.batches + (if (hasWrites) 1 else 0))
+      // published only once the compaction succeeded: a failed
+      // execute applies nothing
+      snap = if (compact || next.batches >= compactEvery) next.compacted else next
     }
     stmts.map {
       case _: SetStmt    => ExecResult()
@@ -128,31 +149,72 @@ final class KvEngine(spark: SparkSession, initial: DataFrame,
     }
   }
 
-  /** Point lookup: `columns=[key,value]`, empty on miss. The
+  /** Point lookup: `columns=[key,value]`, empty on miss. A memtable hit
+    * is a local relation (no Spark job); a miss filters `base`. The
     * consistency option is accepted-and-ignored (Q9; Spark is the
     * single source of truth). */
   def query(get: GetStmt,
-      consistency: ReadConsistency = ReadConsistency()): DataFrame =
-    stateDf.filter(col("key") === lit(get.key)).select(col("key"), col("value"))
+      consistency: ReadConsistency = ReadConsistency()): DataFrame = {
+    val s = snap
+    s.mem.get(get.key) match {
+      case Some(hit) =>
+        spark.createDataFrame(hit.map(v => Row(get.key, v)).toList.asJava, schema)
+      case None => s.base.filter(col("key") === lit(get.key))
+    }
+  }
+
+  /** Plan-free point read: the value of `key`, None on a miss. */
+  def lookup(key: String): Option[String] = lookupAll(Seq(key)).head
+
+  /** Values of `keys`, in order, all read from one snapshot (the
+    * reference answers a query inside one Badger read transaction,
+    * SURVEY.md:360). Memtable hits build no plan; the misses share one
+    * filter over `base`. Should `base` carry a key twice, one of its
+    * values is returned. */
+  def lookupAll(keys: Seq[String]): Seq[Option[String]] = {
+    val s = snap
+    val misses = keys.filterNot(s.mem.contains).distinct
+    val fromBase =
+      if (misses.isEmpty) Map.empty[String, String]
+      else s.base.filter(col("key").isin(misses: _*)).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    keys.map(k => s.mem.getOrElse(k, fromBase.get(k)))
+  }
 
   /** Swap in a full replacement state (the `/db/load` restore path —
     * a dump is a complete database, so loading one REPLACES, exactly
     * like restoring a BadgerDB backup would in the reference's
-    * commented-out handleLoad, `internal/http/service.go:762`). */
-  def replaceState(newState: DataFrame): Unit = {
-    stateDf = newState.select(
-      col("key").cast(StringType), col("value").cast(StringType))
-    batchesSinceCompact = 0
+    * commented-out handleLoad, `internal/http/service.go:762`). Clears
+    * the memtable and runs nothing. */
+  def replaceState(newState: DataFrame): Unit = writeLock.synchronized {
+    snap = new Snapshot(leaf(newState), Map.empty, 0)
   }
 }
 
 object KvEngine {
-  def empty(spark: SparkSession): KvEngine = {
-    val schema = StructType(Seq(
-      StructField("key", StringType), StructField("value", StringType)))
-    new KvEngine(spark, spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
+  private val schema = StructType(Seq(
+    StructField("key", StringType), StructField("value", StringType)))
+
+  private def leaf(df: DataFrame): DataFrame =
+    df.select(col("key").cast(StringType), col("value").cast(StringType))
+
+  /** One immutable view of the engine: `base` plus the memtable of the
+    * `batches` write batches applied since the last compaction. */
+  private final class Snapshot(val base: DataFrame,
+      val mem: Map[String, Option[String]], val batches: Int) {
+    lazy val state: DataFrame =
+      if (mem.isEmpty) base
+      else applyBatch(base.sparkSession, base, mem.toSeq.map {
+        case (k, Some(v)) => SetStmt(k, v)
+        case (k, None)    => DeleteStmt(k)
+      })
+    def compacted: Snapshot =
+      new Snapshot(state.localCheckpoint(true), Map.empty, 0)
   }
+
+  def empty(spark: SparkSession): KvEngine =
+    new KvEngine(spark, spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema))
 
   def apply(spark: SparkSession, state: DataFrame): KvEngine =
     new KvEngine(spark, state)

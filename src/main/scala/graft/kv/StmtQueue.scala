@@ -7,9 +7,10 @@ package graft.kv
   * flush channel until that batch is applied, 408 on timeout).
   *
   * Spark-first shape: buffering writes and applying them as ONE
-  * `KvEngine.execute` batch per flush means one distributed broadcast
-  * merge per flush instead of one per HTTP request — the same
-  * amortization rqlite's queue buys over Raft proposals, and the same
+  * `KvEngine.execute` batch per flush means one memtable batch (one
+  * step towards the next compaction) per flush instead of one per HTTP
+  * request — the same amortization rqlite's queue buys over Raft
+  * proposals, and the same
   * micro-batch semantics as [[graft.streaming.Streaming.queuedWrites]]
   * (there the batchId plays the sequence_number role).
   *
@@ -29,7 +30,7 @@ final class StmtQueue(apply: Seq[Statement] => Unit, flushMs: Long,
     maxRetries: Int) {
 
   def this(kv: KvEngine, flushMs: Long = 50) =
-    this(stmts => kv.synchronized { kv.execute(stmts) }, flushMs, 2)
+    this(stmts => kv.execute(stmts), flushMs, 2)
 
   private[this] val lock = new Object
   private[this] var nextSeq = 0L

@@ -53,9 +53,10 @@ import graft.kv.{GetStmt, KvEngine, StatementParser}
   *    endpoints (service.go:513-528); GET miss writes literal `nil`
   *
   * Handlers run serially on the dispatch thread (no executor): the
-  * control plane is low-QPS by nature and `KvEngine` is intentionally
-  * single-writer. Bind is loopback-only by default — this is a control
-  * plane, not a public API.
+  * control plane is low-QPS by nature. `KvEngine` owns its lock, so the
+  * handlers and the [[graft.kv.StmtQueue]] flusher call it directly.
+  * Bind is loopback-only by default — this is a control plane, not a
+  * public API.
   */
 final class HttpService(
     engine: Engine,
@@ -64,8 +65,9 @@ final class HttpService(
     host: String = "127.0.0.1") {
 
   private val mapper = new ObjectMapper()
-  // JVM-wide request-time belt must be set BEFORE the first HttpServer
-  // of the process is constructed (ServerConfig reads it once) — see
+  // JVM-wide server properties (request-time belt, TCP_NODELAY) must be
+  // set BEFORE the first HttpServer of the process is constructed
+  // (ServerConfig reads them once) — see
   // graft.sources.Sources.HttpServerTuning.
   graft.sources.Sources.HttpServerTuning.ensure()
   private val server = HttpServer.create(new InetSocketAddress(host, port), 0)
@@ -208,9 +210,7 @@ final class HttpService(
             if (flag(qp, "queue")) queuedExecute(ex, qp,
               parsed.collect { case Right(s) => s })
             else {
-              val results = kv.synchronized {
-                kv.execute(parsed.collect { case Right(s) => s })
-              }
+              val results = kv.execute(parsed.collect { case Right(s) => s })
               val root = mapper.createObjectNode()
               val arr = root.putArray("results")
               results.foreach { r =>
@@ -295,18 +295,17 @@ final class HttpService(
         } match {
           case Some(err) => envelope(ex, 400, success = false, error = err)
           case None =>
+            // every GET of the request reads one snapshot
+            val keys = parsed.collect { case Right(g: GetStmt) => g.key }
             val root = mapper.createObjectNode()
             val arr = root.putArray("results")
-            parsed.collect { case Right(g: GetStmt) => g }.foreach { g =>
-              val rows = kv.synchronized { kv.query(g) }.collect()
+            keys.zip(kv.lookupAll(keys)).foreach { case (k, value) =>
               val n = arr.addObject()
               // typed-table shape, store.go:1377-1390
               n.putArray("columns").add("key").add("value")
               n.putArray("types").add("text").add("blob")
               val vs = n.putArray("values")
-              rows.foreach { r =>
-                vs.addArray().add(r.getString(0)).add(r.getString(1))
-              }
+              value.foreach(v => vs.addArray().add(k).add(v))
             }
             sendJson(ex, 200, mapper.writeValueAsString(root))
         }
@@ -324,8 +323,7 @@ final class HttpService(
     ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
     ex.sendResponseHeaders(200, 0) // chunked
     val out = ex.getResponseBody
-    val it = kv.synchronized { kv.state }
-      .orderBy("key").toLocalIterator()
+    val it = kv.state.orderBy("key").toLocalIterator()
     while (it.hasNext) {
       val r = it.next()
       val line = mapper.createObjectNode()
@@ -342,7 +340,8 @@ final class HttpService(
     * restoring a BadgerDB backup does — the reference's handleLoad,
     * also commented out, `internal/http/service.go:762`); `?merge`
     * applies the dump as last-write-wins SETs over the current state
-    * instead. */
+    * instead, folding the dump and the KV memtable into the compacted
+    * base in one compaction. */
   private def handleDbLoad(ex: HttpExchange): Unit = {
     val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
     val parsed =
@@ -356,12 +355,11 @@ final class HttpService(
     parsed match {
       case Left(err) => envelope(ex, 400, success = false, error = err)
       case Right(rows) =>
-        val spark = kv.state.sparkSession
-        import spark.implicits._
-        kv.synchronized {
-          if (flag(queryParams(ex), "merge"))
-            kv.execute(rows.map { case (k, v) => graft.kv.SetStmt(k, v) })
-          else kv.replaceState(rows.toDF("key", "value"))
+        if (flag(queryParams(ex), "merge"))
+          kv.execute(rows.map { case (k, v) => graft.kv.SetStmt(k, v) }, compact = true)
+        else {
+          import kv.spark.implicits._
+          kv.replaceState(rows.toDF("key", "value"))
         }
         val data = mapper.createObjectNode()
         data.put("loaded", rows.size)
@@ -373,9 +371,7 @@ final class HttpService(
     val p = queryParams(ex)
     (p.get("key"), p.get("value")) match {
       case (Some(k), Some(v)) =>
-        kv.synchronized {
-          kv.execute(Seq(graft.kv.SetStmt(k, v)))
-        }
+        kv.execute(Seq(graft.kv.SetStmt(k, v)))
         envelope(ex, 200, success = true)
       case _ => envelope(ex, 400, success = false, error = "key and value required")
     }
@@ -384,10 +380,8 @@ final class HttpService(
   private def handleKeyGet(ex: HttpExchange): Unit =
     queryParams(ex).get("key") match {
       case Some(k) =>
-        val rows = kv.synchronized { kv.query(GetStmt(k)) }.collect()
         // service.go:520-528: miss writes literal "nil", hit the raw value
-        if (rows.isEmpty) sendText(ex, 200, "nil")
-        else sendText(ex, 200, rows(0).getString(1))
+        sendText(ex, 200, kv.lookup(k).getOrElse("nil"))
       case None => envelope(ex, 400, success = false, error = "key required")
     }
 

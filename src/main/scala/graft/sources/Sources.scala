@@ -175,13 +175,22 @@ object Sources {
     * remains for EMBEDDING apps: if host code created an HttpServer
     * before any graft code ran, this belt is inert — the webhook
     * drain loop's own 10 s wall-clock deadline still bounds the
-    * drain path regardless. */
+    * drain path regardless.
+    *
+    * The same hook turns on `sun.net.httpserver.nodelay` (TCP_NODELAY
+    * on accepted sockets), again unless already set. The JDK server
+    * writes response headers and body as separate segments; on a
+    * keep-alive connection Nagle's algorithm then holds the body until
+    * the client's delayed ACK, a fixed ~40 ms on every response. */
   object HttpServerTuning {
     private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
     def ensure(): Unit =
-      if (done.compareAndSet(false, true) &&
-          System.getProperty("sun.net.httpserver.maxReqTime") == null)
-        System.setProperty("sun.net.httpserver.maxReqTime", "30")
+      if (done.compareAndSet(false, true)) {
+        setUnlessSet("sun.net.httpserver.maxReqTime", "30")
+        setUnlessSet("sun.net.httpserver.nodelay", "true")
+      }
+    private def setUnlessSet(key: String, value: String): Unit =
+      if (System.getProperty(key) == null) System.setProperty(key, value)
   }
 
   object WebhookSource {

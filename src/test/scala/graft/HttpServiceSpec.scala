@@ -4,6 +4,8 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.kv.KvEngine
@@ -95,6 +97,36 @@ class HttpServiceSpec extends SparkTestBase {
     assert(get("/key?key=bk5").body() === "keepme")
     // cleanup for other tests sharing the service
     post("/db/execute", """["DELETE bk1","DELETE bk2","DELETE bk3","DELETE bk5"]""")
+  }
+
+  test("a multi-GET /db/query answers hits and misses in statement order") {
+    // mg1/mg3 land in the compacted base, mg2 and the mg3 tombstone in
+    // the memtable: one request reads both layers from one snapshot
+    val dump = """{"key":"mg1","value":"one"}""" + "\n" + """{"key":"mg3","value":"three"}"""
+    assert(post("/db/load?merge", dump).statusCode() === 200)
+    assert(post("/db/execute", """["SET mg2 two words", "DELETE mg3"]""").statusCode() === 200)
+    val r = post("/db/query", """["GET mg2", "GET mgnone", "GET mg1", "GET mg3", "GET mg2"]""")
+    assert(r.statusCode() === 200, r.body())
+    val results = mapper.readTree(r.body()).get("results")
+    val got = (0 until results.size()).map { i =>
+      val vs = results.get(i).get("values")
+      if (vs.size() == 0) None
+      else Some(vs.get(0).get(0).asText() -> vs.get(0).get(1).asText())
+    }
+    assert(got === Seq(Some("mg2" -> "two words"), None, Some("mg1" -> "one"), None,
+      Some("mg2" -> "two words")))
+    post("/db/execute", """["DELETE mg1", "DELETE mg2"]""")
+  }
+
+  test("building an HttpService turns on TCP_NODELAY unless it was set beforehand") {
+    val key = "sun.net.httpserver.nodelay"
+    // a value the JVM was started with is the embedder's, and wins
+    val preset = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.collectFirst {
+        case a if a.startsWith(s"-D$key=") => a.stripPrefix(s"-D$key=")
+      }
+    assert(service.boundPort > 0)
+    assert(sys.props.get(key) === Some(preset.getOrElse("true")))
   }
 
   test("the reference's /key test endpoints: put, get, miss writes 'nil'") {

@@ -44,10 +44,12 @@ class KvModelSpec extends SparkTestBase {
   }
 
   test("KvEngine agrees with the sequential Map model on random batch sequences") {
-    (1L to 3L).foreach { run =>
-      val kv = KvEngine.empty(spark)
+    // compactEvery 1 and 3 cross compactions mid-sequence; 32 never
+    // compacts, so every read goes through the memtable
+    for (compactEvery <- Seq(1, 3, 32); run <- 1L to 3L) {
+      val kv = new KvEngine(spark, KvEngine.empty(spark).state, compactEvery)
       val model = scala.collection.mutable.Map.empty[String, String]
-      (0 until 5).foreach { batchNo =>
+      (0 until 7).foreach { batchNo =>
         val n = 1 + ((run * 31 + batchNo * 7) % 8).toInt
         val batch = (0 until n).map(i =>
           sample(stmtGen, run * 10000 + batchNo * 100 + i))
@@ -61,12 +63,14 @@ class KvModelSpec extends SparkTestBase {
         }
         val engineState = kv.state.collect()
           .map(r => r.getString(0) -> r.getString(1)).toMap
-        assert(engineState === model.toMap,
-          s"run $run batch $batchNo diverged (stmts: ${batch.map(render)})")
+        assert(engineState === model.toMap, s"compactEvery $compactEvery run $run " +
+          s"batch $batchNo diverged (stmts: ${batch.map(render)})")
         // point reads agree on hits AND misses
         val probe = sample(keyGen, run * 7777 + batchNo)
         val got = kv.query(GetStmt(probe)).collect().map(_.getString(1)).headOption
         assert(got === model.get(probe))
+        val keys = Seq("a", "b", "c", "d", "e", "k1", "k2", "zz")
+        assert(kv.lookupAll(keys) === keys.map(model.get))
       }
     }
   }

@@ -8,6 +8,38 @@ import graft.kv._
 class KvSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def kvMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
+    df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+
+  /** Spark jobs started while `body` runs. A fence job tagged by a local
+    * property marks the end: listener events arrive in order, so once
+    * the fence's start is seen every earlier job start has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("kvspec.fence") != null))
+          fenceSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("kvspec.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("kvspec.fence", null)
+      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  private def joins(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.logical.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.size
+
   test("parser: SET value is the space-joined remainder, may be empty") {
     assert(StatementParser.parse("SET k v") === Right(SetStmt("k", "v")))
     assert(StatementParser.parse("SET k a b  c") === Right(SetStmt("k", "a b c")))
@@ -188,5 +220,90 @@ class KvSpec extends SparkTestBase {
     val got = eng.state.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     val want = (1 to 100).map(i => (s"k${i % 7}", s"v$i")).toMap
     assert(got === want)
+  }
+
+  test("a memtable hit runs zero Spark jobs; a miss over a checkpointed base runs one scan") {
+    val eng = new KvEngine(spark, Seq(("b1", "base")).toDF("key", "value"), compactEvery = 4)
+    eng.execute(Seq(SetStmt("b1", "x"), DeleteStmt("b1"), SetStmt("b1", "y")), compact = true)
+    eng.execute(Seq(SetStmt("h", "hit value"), DeleteStmt("gone")))
+    val hitJobs = jobsDuring {
+      assert(eng.lookup("h") === Some("hit value"))
+      assert(eng.lookup("gone") === None) // a tombstone is a hit too
+      assert(eng.lookupAll(Seq("gone", "h")) === Seq(None, Some("hit value")))
+      val rows = eng.query(GetStmt("h")).collect()
+      assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq === Seq(("h", "hit value")))
+      assert(eng.query(GetStmt("gone")).collect().isEmpty)
+    }
+    assert(hitJobs === 0)
+    // the counter does see work: a miss scans the checkpointed base
+    val missJobs = jobsDuring(assert(eng.lookup("b1") === Some("y")))
+    assert(missJobs >= 1)
+  }
+
+  test("a miss's plan has no Join at any depth below compactEvery") {
+    val every = 8
+    val eng = new KvEngine(spark,
+      Seq.tabulate(100)(i => (s"k$i", s"v$i")).toDF("key", "value"), every)
+    for (d <- 0 until 3 * every) {
+      val miss = eng.query(GetStmt(s"k${50 + d}"))
+      assert(joins(miss) === 0, miss.queryExecution.logical.treeString)
+      assert(miss.collect().map(_.getString(1)).toSeq === Seq(s"v${50 + d}"))
+      assert(eng.lookup(s"k${50 + d}") === Some(s"v${50 + d}"))
+      // and the full state never stacks more than one merge
+      assert(joins(eng.state) <= 1, eng.state.queryExecution.logical.treeString)
+      eng.execute(Seq(SetStmt(s"k$d", s"w$d")))
+    }
+  }
+
+  test("a DELETE of a base key hides it before and after compaction") {
+    val eng = new KvEngine(spark,
+      Seq(("a", "1"), ("b", "2")).toDF("key", "value"), compactEvery = 2)
+    eng.execute(Seq(DeleteStmt("a")))
+    assert(eng.lookup("a") === None)
+    assert(eng.query(GetStmt("a")).count() === 0)
+    assert(kvMap(eng.state) === Map("b" -> "2"))
+    eng.execute(Seq(SetStmt("c", "3"))) // second batch: compacts
+    assert(joins(eng.state) === 0, eng.state.queryExecution.logical.treeString)
+    assert(eng.lookup("a") === None)
+    assert(eng.query(GetStmt("a")).count() === 0)
+    assert(eng.lookupAll(Seq("a", "b", "c")) === Seq(None, Some("2"), Some("3")))
+    assert(kvMap(eng.state) === Map("b" -> "2", "c" -> "3"))
+  }
+
+  test("state is the same before and after compaction") {
+    val eng = new KvEngine(spark,
+      Seq.tabulate(20)(i => (s"k$i", s"v$i")).toDF("key", "value"), compactEvery = 32)
+    eng.execute(Seq(SetStmt("k1", "x"), DeleteStmt("k2"), SetStmt("n", "")))
+    eng.execute(Seq(SetStmt("k1", "y"), DeleteStmt("k3"), SetStmt("k2", "back")))
+    val before = eng.state.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(joins(eng.state) === 1)
+    eng.execute(Nil, compact = true)
+    assert(joins(eng.state) === 0, eng.state.queryExecution.logical.treeString)
+    val after = eng.state.collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    assert(after === before)
+    assert(before.toMap.get("k1") === Some("y") && before.toMap.get("k2") === Some("back"))
+    assert(!before.toMap.contains("k3") && before.toMap.get("n") === Some(""))
+  }
+
+  test("the engine is safe from concurrent readers while writers compact") {
+    val eng = new KvEngine(spark, Seq(("r", "0")).toDF("key", "value"), compactEvery = 3)
+    @volatile var writing = true
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val reader = new Thread(() => {
+      var last = 0
+      while (writing) {
+        // values only move forward: a read never sees an older write
+        val v = eng.lookup("r").get.toInt
+        if (v < last) errors.add(s"read $v after $last")
+        last = v
+        eng.state
+      }
+    })
+    reader.start()
+    try for (i <- 1 to 12) eng.execute(Seq(SetStmt("r", i.toString)))
+    finally { writing = false; reader.join() }
+    assert(errors.isEmpty, errors)
+    assert(eng.lookup("r") === Some("12"))
+    assert(kvMap(eng.state) === Map("r" -> "12"))
   }
 }
