@@ -1,9 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
-import graft.functions.cosine_sim
+import graft.functions.{cosine_sim, BoundedTopK, VecOps}
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column.
@@ -17,23 +18,54 @@ import graft.functions.cosine_sim
   *    full-table scan and touching `nprobe/k` of the data (with
   *    partition pruning doing the skipping via the `cluster` column).
   *
+  * Every IVF operation is one of two halves composed:
+  *  - the QUANTIZER ([[IvfShape]]): the flat centers ([[buildIvf]]) or
+  *    the two-level coarse + sub-centers ([[buildIvfHierarchical]]).
+  *    It owns the index shape's one assignment function (build and
+  *    every append) and a ranked probe list per query, in a driver
+  *    form (one query, [[probeList]]) and a batched form (a query
+  *    table, [[probesRanked]]);
+  *  - the SCAN: filter to the probed clusters, optionally cut to
+  *    `rescore` on a compressed first-stage score ([[Codes]]: the SQ8
+  *    integer cosine or the PQ ADC score), then the exact float cut
+  *    to `topK`.
+  * Search ([[searchIvf]], [[searchIvfHier]]), the batched k-NN join,
+  * the nprobe tuner and append are each written once over that pair.
+  *
   * Scale design of the build (the round-1 version fit k-means on the
   * FULL table through a per-row MLlib Vector UDF — a multi-pass scan of
   * everything, at 100 TB a non-starter):
   *  - the quantizer fits on a bounded SAMPLE (`maxFitRows`) — k-means
   *    needs a sketch of the density, not every row; the sample is
   *    l2-normalized so Euclidean k-means on it approximates spherical
-  *    (cosine) clustering, matching the cosine probe geometry;
-  *  - full-table assignment runs through the codegen'd [[cosine_sim]]
-  *    expression against the centers inlined as literals — one
-  *    whole-stage-codegen scan, no UDF, no MLlib on the big side;
+  *    (cosine) clustering, matching the cosine probe geometry; every
+  *    fit (flat, coarse, per-cell, PQ codebooks) runs the one
+  *    driver-local Lloyd loop ([[lloyd]]);
+  *  - full-table assignment runs through the codegen'd
+  *    [[graft.functions.ArgMaxCosine]] expression with the centers as
+  *    one plan reference object — one whole-stage-codegen scan, no UDF;
   *  - [[persistIvf]] writes the assignment `partitionBy("cluster")`
   *    once, making every later search a partition-pruned scan
   *    (build-once / search-many).
   */
 object Ann {
 
+  /** An index shape — the quantizer half of every IVF operation.
+    * `assign` is the shape's ONE assignment function: its build uses
+    * it, and so does every append (batch, stream or idempotent), so an
+    * appended row lands exactly where a rebuild with the same centers
+    * puts it. */
+  sealed trait IvfShape {
+    def index: IvfIndex
+    def assign(rows: DataFrame, embCol: String): DataFrame
+  }
+
   final case class IvfIndex(centers: Array[Array[Float]], assigned: DataFrame)
+      extends IvfShape {
+    def index: IvfIndex = this
+    def assign(rows: DataFrame, embCol: String): DataFrame =
+      assignByCosine(rows, embCol, centers)
+  }
 
   /** Assign every row to its max-cosine center via the codegen'd
     * [[graft.functions.ArgMaxCosine]] expression. The centers ride as
@@ -49,10 +81,24 @@ object Ann {
       centers: Array[Array[Float]]): DataFrame =
     df.withColumn("cluster", graft.functions.argmax_cosine(col(embCol), centers))
 
+  /** A bounded sample of `c` over `df`, collected to the driver: one
+    * column-pruned count sizes the sample fraction (parquet answers it
+    * from footer metadata, not a data scan), then at most `maxFitRows`
+    * rows. The rows are a function of the input's partitioning unless
+    * the whole input is the sample (n ≤ maxFitRows): `df.sample` seeds
+    * per partition and `limit` keeps whichever rows arrive first. */
+  private def fitSample(df: DataFrame, c: Column, seed: Long,
+      maxFitRows: Int): Array[Row] = {
+    val n = df.count()
+    val frac = math.min(1.0, maxFitRows * 1.2 / math.max(1L, n))
+    (if (frac < 1.0) df.sample(withReplacement = false, frac, seed) else df)
+      .select(c).limit(maxFitRows).collect()
+  }
+
   /** k-means centers from a bounded sample of `df` (the fit-side
     * discipline shared by the flat and hierarchical builds): collect
-    * the l2-normalized sample to the driver and run a seeded,
-    * DETERMINISTICALLY PARALLEL local Lloyd ([[localKmeansParallel]]).
+    * the l2-normalized sample to the driver and run the seeded,
+    * deterministically parallel local [[lloyd]].
     *
     * Replaced the MLlib distributed KMeans in r21 — measured: the
     * k-means|| init + per-iteration job rounds cost ~5.8 s on a
@@ -62,40 +108,55 @@ object Ann {
     * scheduling per iteration. This is the standard IVF construction
     * (FAISS trains its coarse quantizer exactly this way: sample to
     * one machine, local Lloyd). The sample is sorted lexicographically
-    * before the fit, so the centers are bit-identical under ANY input
-    * partitioning — strictly stronger determinism than the MLlib path,
-    * whose treeAggregate reduction order could wobble the last ulp.
-    * The driver already held a same-sized collect on this path (MLlib
-    * k-means|| collects its init candidates); memory is unchanged,
-    * ~maxFitRows·d floats. */
-  private def fitCentersMl(df: DataFrame, embCol: String, k: Int,
+    * before the fit, so the centers are bit-identical under any input
+    * partitioning WHEN THE WHOLE INPUT IS THE SAMPLE (n ≤ maxFitRows;
+    * see [[fitSample]] for why a sampled or limited fit depends on the
+    * partitioning), and across core counts always — strictly stronger
+    * determinism than the MLlib path, whose treeAggregate reduction
+    * order could wobble the last ulp. The driver already held a
+    * same-sized collect on this path (MLlib k-means|| collects its init
+    * candidates); memory is unchanged, ~maxFitRows·d floats. */
+  private def fitCenters(df: DataFrame, embCol: String, k: Int,
       seed: Long, maxFitRows: Int): Array[Array[Float]] = {
-    // one column-pruned count to size the sample fraction (parquet
-    // answers this from footer metadata, not a data scan)
-    val n = df.count()
-    val frac = math.min(1.0, maxFitRows * 1.2 / math.max(1L, n))
-    val sample =
-      (if (frac < 1.0) df.sample(withReplacement = false, frac, seed) else df)
-        .select(graft.functions.unit_vec(col(embCol)).as("__unit"))
-        .limit(maxFitRows)
-    val pts = sample.collect().map(_.getSeq[Double](0).toArray.map(_.toFloat))
+    val pts = fitSample(df, graft.functions.unit_vec(col(embCol)), seed, maxFitRows)
+      .map(_.getSeq[Double](0).toArray.map(_.toFloat))
     require(pts.nonEmpty, "fitCenters: empty sample")
-    localKmeansParallel(pts.sorted(vecOrd), k, maxIters = 20, seed = seed)
+    lloyd(pts.sorted(vecOrd), k, maxIters = 20, seed = seed)
   }
 
-  /** [[localKmeans]] scaled to the coarse-fit regime (k1 up to ~1024
-    * over a ≤200k sample): the assignment+partial-sum step fans out
-    * over FIXED-SIZE point chunks (1024 points — a function of the
-    * sample alone, never of the host's core count) on a driver thread
-    * pool, partials merge in CHUNK-INDEX ORDER — so the result is
-    * bit-identical regardless of thread scheduling AND across machines
-    * with different core counts (r21 advice: the old
-    * availableProcessors-derived grid grouped float additions
-    * differently per host) — and iteration stops early once no
-    * assignment changes (Lloyd has converged exactly; further
-    * iterations are fixpoint no-ops). Seeded distinct-index init,
-    * same as [[localKmeans]]. */
-  private[ops] def localKmeansParallel(points: Array[Array[Float]], k: Int,
+  /** The JVM's one Lloyd pool: at most one daemon thread per core,
+    * shared by every concurrent fit (driver-side flat/coarse/PQ fits
+    * and the executor-side per-cell fits alike). Pool threads only
+    * run chunk arithmetic and never wait on the pool, so callers
+    * sharing it cannot deadlock; they only queue. */
+  private lazy val lloydPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(
+      Runtime.getRuntime.availableProcessors(), (r: Runnable) => {
+        val t = new Thread(r, "graft-lloyd")
+        t.setDaemon(true)
+        t
+      })
+
+  /** The one Lloyd loop (every k-means fit here: flat centers, the
+    * coarse level, the per-cell sub-centers, the PQ codebooks). The
+    * assignment+partial-sum step fans out over FIXED-SIZE point chunks
+    * (1024 points — a function of the sample alone, never of the
+    * host's core count) on [[lloydPool]], partials merge in CHUNK-INDEX
+    * ORDER — so the result is bit-identical regardless of thread
+    * scheduling AND across machines with different core counts (r21
+    * advice: the old availableProcessors-derived grid grouped float
+    * additions differently per host) — and iteration stops early once
+    * no assignment changes (Lloyd has converged exactly; further
+    * iterations are fixpoint no-ops). A single-chunk fit runs inline
+    * in the caller's thread.
+    *
+    * Deterministic seeded init from k DISTINCT point indices (a seeded
+    * shuffle): sampling indices with replacement would duplicate
+    * initial centers with near-certainty at k=256 over a 20k sample
+    * (birthday effect), and duplicated centroids converge to
+    * duplicated codewords, shrinking the effective codebook and recall
+    * (ADVICE round 5). */
+  private[ops] def lloyd(points: Array[Array[Float]], k: Int,
       maxIters: Int, seed: Long): Array[Array[Float]] = {
     val rnd = new scala.util.Random(seed)
     val d = points(0).length
@@ -113,73 +174,69 @@ object Ann {
     // on any machine (and to a sequential pass over the same chunks).
     val chunk = 1024
     val nChunks = (points.length + chunk - 1) / chunk
-    val nThreads = math.max(1,
-      math.min(Runtime.getRuntime.availableProcessors(), nChunks))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(nThreads)
-    try {
-      var it = 0
-      var changed = true
-      while (it < maxIters && changed) {
-        val futures = (0 until nChunks).map { t =>
-          pool.submit(new java.util.concurrent.Callable[
-              (Array[Array[Double]], Array[Int], Boolean)] {
-            def call() = {
-              val lo = t * chunk
-              val hi = math.min(points.length, lo + chunk)
-              val sums = Array.ofDim[Double](k, d)
-              val counts = new Array[Int](k)
-              var moved = false
-              var p = lo
-              while (p < hi) {
-                val v = points(p)
-                var best = 0; var bestD = Double.MaxValue
-                var c = 0
-                while (c < k) {
-                  var dist = 0.0; var i = 0
-                  val cent = centers(c)
-                  while (i < d) { val df = v(i) - cent(i); dist += df * df; i += 1 }
-                  if (dist < bestD) { bestD = dist; best = c }
-                  c += 1
-                }
-                if (assign(p) != best) { assign(p) = best; moved = true }
-                counts(best) += 1
-                var i = 0
-                while (i < d) { sums(best)(i) += v(i); i += 1 }
-                p += 1
-              }
-              (sums, counts, moved)
-            }
-          })
-        }
-        // merge partials in fixed range order: double addition is
-        // non-associative, so the order must not depend on scheduling
-        val sums = Array.ofDim[Double](k, d)
-        val counts = new Array[Int](k)
-        changed = false
-        futures.foreach { f =>
-          val (ps, pc, moved) = f.get()
-          changed ||= moved
-          var c = 0
-          while (c < k) {
-            counts(c) += pc(c)
-            var i = 0
-            while (i < d) { sums(c)(i) += ps(c)(i); i += 1 }
-            c += 1
-          }
-        }
+    def partial(t: Int): (Array[Array[Double]], Array[Int], Boolean) = {
+      val lo = t * chunk
+      val hi = math.min(points.length, lo + chunk)
+      val sums = Array.ofDim[Double](k, d)
+      val counts = new Array[Int](k)
+      var moved = false
+      var p = lo
+      while (p < hi) {
+        val v = points(p)
+        var best = 0; var bestD = Double.MaxValue
         var c = 0
         while (c < k) {
-          // empty clusters keep their previous center (they simply
-          // never win assignments) — same policy as localKmeans
-          if (counts(c) > 0) {
-            var i = 0
-            while (i < d) { centers(c)(i) = (sums(c)(i) / counts(c)).toFloat; i += 1 }
-          }
+          var dist = 0.0; var i = 0
+          val cent = centers(c)
+          while (i < d) { val df = v(i) - cent(i); dist += df * df; i += 1 }
+          if (dist < bestD) { bestD = dist; best = c }
           c += 1
         }
-        it += 1
+        if (assign(p) != best) { assign(p) = best; moved = true }
+        counts(best) += 1
+        var i = 0
+        while (i < d) { sums(best)(i) += v(i); i += 1 }
+        p += 1
       }
-    } finally pool.shutdown()
+      (sums, counts, moved)
+    }
+    var it = 0
+    var changed = true
+    while (it < maxIters && changed) {
+      val parts =
+        if (nChunks == 1) Seq(partial(0))
+        else (0 until nChunks).map { t =>
+          val task: java.util.concurrent.Callable[
+            (Array[Array[Double]], Array[Int], Boolean)] = () => partial(t)
+          lloydPool.submit(task)
+        }.map(_.get())
+      // merge partials in fixed range order: double addition is
+      // non-associative, so the order must not depend on scheduling
+      val sums = Array.ofDim[Double](k, d)
+      val counts = new Array[Int](k)
+      changed = false
+      parts.foreach { case (ps, pc, moved) =>
+        changed ||= moved
+        var c = 0
+        while (c < k) {
+          counts(c) += pc(c)
+          var i = 0
+          while (i < d) { sums(c)(i) += ps(c)(i); i += 1 }
+          c += 1
+        }
+      }
+      var c = 0
+      while (c < k) {
+        // empty clusters keep their previous center (they simply
+        // never win assignments)
+        if (counts(c) > 0) {
+          var i = 0
+          while (i < d) { centers(c)(i) = (sums(c)(i) / counts(c)).toFloat; i += 1 }
+        }
+        c += 1
+      }
+      it += 1
+    }
     centers
   }
 
@@ -188,7 +245,7 @@ object Ann {
     * the original columns plus `cluster`. */
   def buildIvf(df: DataFrame, embCol: String, k: Int, seed: Long = 42L,
       maxFitRows: Int = 100000): IvfIndex = {
-    val centers = fitCentersMl(df, embCol, k, seed, maxFitRows)
+    val centers = fitCenters(df, embCol, k, seed, maxFitRows)
     IvfIndex(centers, assignByCosine(df, embCol, centers))
   }
 
@@ -198,6 +255,10 @@ object Ann {
     * cost, so callers (and specs) can verify the fit stayed bounded. */
   final case class HierIvf(index: IvfIndex, coarse: Array[Array[Float]],
       k1: Int, k2: Int, sampleTarget: Long, subLloydDistComps: Long)
+      extends IvfShape {
+    def assign(rows: DataFrame, embCol: String): DataFrame =
+      assignByCosineHier(rows, embCol, this)
+  }
 
   /** Deterministic lexicographic order on float vectors — cell samples
     * are sorted with it before Lloyd so the fit is independent of
@@ -229,15 +290,18 @@ object Ann {
     }
   }
 
+  /** The hierarchical build's scratch column (coarse cell per row). */
+  private val CellCol = "__graft_cell"
+
   /** Two-level hierarchical coarse quantizer — the fit that REACHES
     * SemDeDup-scale k (up to 2^20), where a flat Lloyd cannot: flat
     * k-means is O(sample·k·d) per iteration (~10^17 flops at k=2^20,
-    * d=64 with a meaningful sample), runs on the driver via MLlib, and
-    * its bounded sample leaves ~2 points per centroid at the top. The
+    * d=64 with a meaningful sample), runs on the driver, and its
+    * bounded sample leaves ~2 points per centroid at the top. The
     * standard IVF construction instead fits k1 ≈ sqrt(k) coarse
-    * centers (tiny MLlib problem), partitions a sqrt-scaled sample by
-    * coarse cell, and fits k2 ≈ sqrt(k) sub-centers per cell with a
-    * LOCAL Lloyd inside `mapGroups` — k1 independent, bounded,
+    * centers (a tiny driver-local problem), partitions a sqrt-scaled
+    * sample by coarse cell, and fits k2 ≈ sqrt(k) sub-centers per cell
+    * with a LOCAL Lloyd inside `mapGroups` — k1 independent, bounded,
     * executor-side fits instead of one driver-side monolith:
     *  - total fit work is O(sample·k2·d) = O(sample·sqrt(k)·d), a
     *    sqrt(k) reduction, and it parallelizes over cells;
@@ -264,15 +328,15 @@ object Ann {
     require(pointsPerCentroid >= 1 && iters >= 1,
       "buildIvfHierarchical: pointsPerCentroid and iters must be >= 1")
     require(maxFitRows >= 1, "buildIvfHierarchical: maxFitRows must be >= 1")
+    require(!df.columns.contains(CellCol),
+      s"buildIvfHierarchical: input collides with reserved column $CellCol")
     val k1Req = math.ceil(math.sqrt(k.toDouble)).toInt
     val spark = df.sparkSession
     import spark.implicits._
-    // level-1: a small MLlib problem (k1 centers from ~20·k1 points);
-    // MLlib may return FEWER than requested centers on degenerate
-    // samples (duplicate points), so the level sizes derive from the
-    // table actually fitted. maxFitRows (the caller's total fit-sample
-    // bound, threaded from buildIvfAuto) caps BOTH levels.
-    val coarse = fitCentersMl(df, embCol, k1Req, seed,
+    // level-1: a small driver-local fit (k1 centers from ~20·k1
+    // points). maxFitRows (the caller's total fit-sample bound,
+    // threaded from buildIvfAuto) caps BOTH levels.
+    val coarse = fitCenters(df, embCol, k1Req, seed,
       math.min(maxFitRows, math.min(coarseFitRows, math.max(1000, 20 * k1Req))))
     val k1 = coarse.length
     val k2 = math.ceil(k.toDouble / k1).toInt
@@ -310,7 +374,7 @@ object Ann {
         var i = pts.length - 1
         while (i >= 0) { pts(i) = heap.poll(); i -= 1 } // max-first drain → ascending
         val use = pts.map(l2NormalizeF)
-        val cents = localKmeans(use, k2, iters, seed + 2 + cell)
+        val cents = lloyd(use, k2, iters, seed + 2 + cell)
         (cell, cents.map(_.toSeq).toSeq, use.length.toLong * k2 * iters)
       }
       .collect()
@@ -323,75 +387,17 @@ object Ann {
         case None     => coarse(id / k2) // cell empty in the sample
       }
     }
-    val subCenters = Array.tabulate(k1)(c =>
-      Array.tabulate(k2)(j => flat(c * k2 + j)))
-    val cellCol = "__graft_cell"
-    require(!df.columns.contains(cellCol),
-      s"buildIvfHierarchical: input collides with reserved column $cellCol")
-    val assigned = df
-      .withColumn(cellCol, graft.functions.argmax_cosine(col(embCol), coarse))
-      .withColumn("cluster",
-        graft.functions.argmax_cosine_cell(col(embCol), col(cellCol), subCenters))
-      .drop(cellCol)
-    HierIvf(IvfIndex(flat, assigned), coarse, k1, k2, sampleTarget,
+    // the fitted shape first, so the build assigns through the same
+    // function ([[assignByCosineHier]]) every append uses
+    val fitted = HierIvf(IvfIndex(flat, df), coarse, k1, k2, sampleTarget,
       perCell.map(_._3).sum)
+    fitted.copy(index = IvfIndex(flat, fitted.assign(df, embCol)))
   }
 
-  /** Two-level IVF probe over a hierarchical index: rank the k1 coarse
-    * cells, then only the sub-centers of the best `nprobeCoarse` cells,
-    * and scan the best `nprobe` global clusters — driver ranking cost
-    * O((k1 + nprobeCoarse·k2)·d) instead of [[searchIvf]]'s O(k·d),
-    * which matters exactly where the hierarchical build does (at
-    * k=2^20 a flat rank touches 1M centers per query; two-level
-    * touches ~2k·nprobeCoarse). The scan itself is the same
-    * partition-pruned cluster filter + TakeOrdered as [[searchIvf]]. */
-  def searchIvfHier(h: HierIvf, embCol: String, query: Array[Float],
-      topK: Int, nprobeCoarse: Int, nprobe: Int,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    bruteForce(
-      h.index.assigned.filter(
-        col("cluster").isin(
-          probeHier(h, query, nprobeCoarse, nprobe).toIndexedSeq
-            .map(Integer.valueOf): _*)),
-      embCol, query, topK, tieBreak)
-
-  /** The two-level cluster ranking [[searchIvfHier]] scans by — also
-    * the ranking stage for the compressed-code hierarchical searches:
-    * O((k1 + nprobeCoarse·k2)·d) driver work instead of the flat
-    * O(k·d). */
-  private def probeHier(h: HierIvf, query: Array[Float],
-      nprobeCoarse: Int, nprobe: Int): Array[Int] = {
-    val cells = rankClusters(h.coarse, query).take(nprobeCoarse)
-    cells.flatMap(c => (0 until h.k2).map(j => c * h.k2 + j))
-      .sortBy(id => -graft.functions.VecOps.cosineFF(h.index.centers(id), query))
-      .take(nprobe)
-  }
-
-  /** Hierarchical probe + SQ8 compressed scoring — the full 100-TB
-    * search shape: √k-scaled center ranking (two-level, never touching
-    * all k centers) feeding the two-stage int8 scan ([[searchIvfSq8]]'s
-    * integer scoring + exact float rescore) over only the probed
-    * clusters. Requires [[withSq8]] codes on `h.index`. */
-  def searchIvfHierSq8(h: HierIvf, embCol: String, query: Array[Float],
-      topK: Int, nprobeCoarse: Int, nprobe: Int, rescore: Int = 100,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    searchSq8On(h.index, probeHier(h, query, nprobeCoarse, nprobe),
-      embCol, query, topK, rescore, tieBreak)
-
-  /** Hierarchical probe + PQ/ADC compressed scoring (m-byte codes),
-    * the [[searchIvfPq]] twin of [[searchIvfHierSq8]]. Requires
-    * [[withPq]] codes on `h.index`. */
-  def searchIvfHierPq(h: HierIvf, embCol: String, query: Array[Float],
-      codebook: PqCodebook, topK: Int, nprobeCoarse: Int, nprobe: Int,
-      rescore: Int = 100,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    searchPqOn(h.index, probeHier(h, query, nprobeCoarse, nprobe),
-      embCol, query, codebook, topK, rescore, tieBreak)
-
-  /** The build the catalog uses: flat MLlib fit while k is small
-    * enough that a single Lloyd problem is cheap and well-sampled;
-    * past `hierThreshold` the two-level fit takes over (flat cost
-    * grows O(k) per sample point AND the capped sample starves the
+  /** The build the catalog uses: the flat fit while k is small enough
+    * that a single Lloyd problem is cheap and well-sampled; past
+    * `hierThreshold` the two-level fit takes over (flat cost grows
+    * O(k) per sample point AND the capped sample starves the
     * centroids — the round-7 verdict's "un-capped k is not fittable"
     * finding). */
   def buildIvfAuto(df: DataFrame, embCol: String, k: Int, seed: Long = 42L,
@@ -445,40 +451,226 @@ object Ann {
       index.assigned(idCol) === dropped("__xid"), "left_anti")
   }
 
-  /** Exact brute-force cosine top-k (baseline; also the in-cluster
-    * scorer for IVF). `tieBreak` columns make the top-k cut
+  /** Exact brute-force cosine top-k (baseline; also the exact cut of
+    * every IVF scan). `tieBreak` columns make the top-k cut
     * deterministic when scores collide at the boundary. */
   def bruteForce(df: DataFrame, embCol: String, query: Array[Float],
-      topK: Int, tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
+      topK: Int, tieBreak: Seq[Column] = Nil): DataFrame = {
     val qLit = typedLit(query.toSeq)
     df.withColumn("score", cosine_sim(col(embCol), qLit))
       .orderBy(col("score").desc +: tieBreak: _*)
       .limit(topK)
   }
 
-  /** IVF search: rank centroids by cosine to the query (driver-side —
-    * centers are k·d floats, trivially small), scan only the best
-    * `nprobe` clusters, brute-force within. The query vector's own
-    * best cluster is by construction the top-ranked probe, so it is
-    * always scanned. */
-  def searchIvf(index: IvfIndex, embCol: String, query: Array[Float],
-      topK: Int, nprobe: Int,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < math.min(a.length, b.length)) {
-        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      if (na == 0 || nb == 0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
+  // ---- the probe ranking: the quantizer's half of a search or join ----
+
+  /** Which clusters a query probes, best first: every center ranked
+    * ([[Flat]]), or the best `nprobeCoarse` coarse cells ranked and
+    * then only their sub-centers ([[TwoLevel]]) — O((k1 +
+    * nprobeCoarse·k2)·d) ranking work per query instead of the flat
+    * O(k·d), which matters exactly where the hierarchical build does
+    * (at k=2^20 a flat rank touches 1M centers per query; two-level
+    * touches ~2k·nprobeCoarse). */
+  private[graft] sealed trait Ranking { def index: IvfIndex }
+  private[graft] final case class Flat(index: IvfIndex) extends Ranking
+  /** `maxCenterBroadcastBytes` bounds the batched form's sub-center
+    * table broadcast (see [[probesRanked]]). */
+  private[graft] final case class TwoLevel(h: HierIvf, nprobeCoarse: Int,
+      maxCenterBroadcastBytes: Long = 256L << 20) extends Ranking {
+    def index: IvfIndex = h.index
+  }
+
+  /** Ascending `ids` ranked by [[VecOps.cosineFF]] of their center to
+    * the query, best first; the stable sort resolves ties to the lowest
+    * id — the same clamped cosine and total order (score DESC, id ASC)
+    * the batched [[probesRanked]] applies. */
+  private def rankByCosine(centers: Array[Array[Float]], ids: Array[Int],
+      query: Array[Float]): Array[Int] =
+    ids.sortBy(id => -VecOps.cosineFF(centers(id), query))
+
+  /** The driver-form probe list of one query (centers are k·d floats,
+    * trivially small). The query vector's own best cluster is by
+    * construction ranked first, so it is always scanned. */
+  private[graft] def probeList(r: Ranking, query: Array[Float],
+      nprobe: Int): Array[Int] = r match {
+    case Flat(index) =>
+      rankByCosine(index.centers, index.centers.indices.toArray, query).take(nprobe)
+    case TwoLevel(h, nprobeCoarse, _) =>
+      val cells = rankByCosine(h.coarse, h.coarse.indices.toArray, query)
+        .take(nprobeCoarse)
+      rankByCosine(h.index.centers,
+        cells.flatMap(c => (0 until h.k2).map(j => c * h.k2 + j)).sorted, query)
+        .take(nprobe)
+  }
+
+  /** (i, center) rows of a small center table, ids as longs (the
+    * [[BoundedTopK]] id type). */
+  private def centerRows(centers: Array[Array[Float]]): Seq[(Long, Seq[Float])] =
+    centers.toIndexedSeq.zipWithIndex.map { case (c, i) => (i.toLong, c.toIndexedSeq) }
+
+  /** Per query, the `n` best `idCol` of the (query, center) `pairs` by
+    * cosine, as the bounded top-k struct `__graft_top` — map-side
+    * bounded, so the exchange carries |Q|·n rows, never |pairs|. */
+  private def topByCosine(pairs: DataFrame, qIdCol: String, qEmbCol: String,
+      centerCol: String, idCol: String, simCol: String, n: Int): DataFrame =
+    pairs.withColumn(simCol, cosine_sim(col(qEmbCol), col(centerCol)))
+      .groupBy(col(qIdCol))
+      .agg(BoundedTopK.top_k_by(col(simCol), col(idCol), n).as("__graft_top"))
+
+  /** The batched-form probe ranking of a query table as (qIdCol,
+    * __graft_probe, __graft_pr), rank 1 = best under
+    * [[BoundedTopK]]'s total order (cosine DESC, cluster ASC). Its
+    * prefix of length n is exactly the probe set of a join at
+    * nprobe=n — the tuner's all-levels path depends on that.
+    *  - Flat: every center per query against the BROADCAST center
+    *    table (k·d floats — broadcast-class by construction), cut to
+    *    `nprobe`.
+    *  - TwoLevel: the k1 ≈ √k coarse cells per query (|Q|·k1 rows
+    *    against the broadcast coarse table), cut to `nprobeCoarse`;
+    *    then an EQUI-join of the (query, cell) pairs with the
+    *    sub-center table keyed by cell (|Q|·nprobeCoarse·k2 rows), cut
+    *    to `nprobe` global clusters. Rank is within the pooled
+    *    sub-center ranking of the FIXED coarse cut. */
+  private[graft] def probesRanked(r: Ranking, q: DataFrame, qIdCol: String,
+      qEmbCol: String, nprobe: Int): DataFrame = {
+    val spark = q.sparkSession
+    import spark.implicits._
+    val (pairs, simCol) = r match {
+      case Flat(index) =>
+        (q.crossJoin(broadcast(
+          centerRows(index.centers).toDF("__graft_cl", "__graft_center"))),
+          "__graft_csim")
+      case TwoLevel(h, nprobeCoarse, maxCenterBroadcastBytes) =>
+        // flat sub-center table keyed by coarse cell (cluster id =
+        // cell·k2+j). The coarse table is always k1 ≈ √k rows —
+        // broadcast-class by construction — but THIS one is all k
+        // sub-centers: ~3 GB at k≈2^20, d=768, past any sane
+        // broadcast. Under the size bound we broadcast (zero exchange
+        // on the probe side); over it the rows are distributed via
+        // parallelize and the cell equi-join shuffles
+        // |Q|·nprobeCoarse probe rows on `__graft_cell` instead — the
+        // probe side is already keyed by cell, so the exchange is the
+        // bounded probe set, never the corpus.
+        val subRows = h.index.centers.toIndexedSeq.zipWithIndex
+          .map { case (c, id) => ((id / h.k2).toLong, id.toLong, c.toIndexedSeq) }
+        val d = if (h.index.centers.isEmpty) 0 else h.index.centers(0).length
+        val subBytes = h.index.centers.length.toLong * (4L * d + 24L)
+        val subDf =
+          if (subBytes <= maxCenterBroadcastBytes)
+            broadcast(subRows.toDF("__graft_cell", "__graft_cl", "__graft_center"))
+          else {
+            val slices = math.max(1, (subBytes / (32L << 20)).toInt)
+            spark.createDataset(spark.sparkContext.parallelize(subRows, slices))
+              .toDF("__graft_cell", "__graft_cl", "__graft_center")
+          }
+        val cellProbes = topByCosine(
+            q.crossJoin(broadcast(centerRows(h.coarse).toDF("__graft_cell", "__graft_ccenter"))),
+            qIdCol, qEmbCol, "__graft_ccenter", "__graft_cell", "__graft_csim", nprobeCoarse)
+          .select(col(qIdCol), explode(col("__graft_top.id")).as("__graft_cell"))
+          .join(q, qIdCol)
+        (cellProbes.join(subDf, "__graft_cell"), "__graft_ssim")
     }
-    val probed = index.centers.zipWithIndex
-      .sortBy { case (c, _) => -cos(c, query) }
-      .take(nprobe).map(_._2)
-    bruteForce(
-      index.assigned.filter(col("cluster").isin(probed.toIndexedSeq.map(Integer.valueOf): _*)),
-      embCol, query, topK, tieBreak)
+    topByCosine(pairs, qIdCol, qEmbCol, "__graft_center", "__graft_cl", simCol, nprobe)
+      .select(col(qIdCol), posexplode(col("__graft_top.id"))
+        .as(Seq("__graft_pos", "__graft_probe")))
+      .select(col(qIdCol), col("__graft_probe"),
+        (col("__graft_pos") + 1).as("__graft_pr"))
+  }
+
+  // ---- the scan: probed clusters, optional compressed stage, exact cut ----
+
+  /** The first stage of an IVF scan. [[Exact]] scores the float
+    * embeddings once; the compressed stages rank the probed rows on
+    * codes carried in the index, keep the best `rescore`, and only
+    * those reach the exact float cut. */
+  sealed trait Codes
+  case object Exact extends Codes
+  /** int8 codes ([[withSq8]]): the integer-domain quantized cosine
+    * (byte codes, long accumulate). With `rescore >= topK` and SQ8's
+    * <1% score perturbation, recall vs the exact scan is near-total
+    * while the heavy scan never touches the float column. */
+  final case class Sq8(rescore: Int = 100) extends Codes
+  /** m-byte PQ codes ([[withPq]]): ADC via per-query lookup tables.
+    * With exhaustive probe + rescore the result is exact (the ADC
+    * stage only orders candidates that all survive the cut). */
+  final case class Pq(codebook: PqCodebook, rescore: Int = 100) extends Codes
+
+  /** IVF search: rank the clusters by cosine to the query (driver
+    * side), scan only the best `nprobe`, cut through `codes` to the
+    * exact top `topK`. */
+  def searchIvf(index: IvfIndex, embCol: String, query: Array[Float],
+      topK: Int, nprobe: Int, tieBreak: Seq[Column] = Nil,
+      codes: Codes = Exact): DataFrame =
+    scan(index, probeList(Flat(index), query, nprobe), embCol, query, topK,
+      codes, tieBreak)
+
+  /** [[searchIvf]] through the two-level probe ranking: the best
+    * `nprobe` sub-clusters of the best `nprobeCoarse` coarse cells. */
+  def searchIvfHier(h: HierIvf, embCol: String, query: Array[Float],
+      topK: Int, nprobeCoarse: Int, nprobe: Int,
+      tieBreak: Seq[Column] = Nil, codes: Codes = Exact): DataFrame =
+    scan(h.index, probeList(TwoLevel(h, nprobeCoarse), query, nprobe), embCol,
+      query, topK, codes, tieBreak)
+
+  /** The one scan body: the partition-pruned cluster filter, the
+    * optional compressed cut to `rescore`, the exact TakeOrdered cut
+    * to `topK`. `tieBreak` makes BOTH cuts deterministic under score
+    * collisions. */
+  private def scan(index: IvfIndex, probed: Array[Int], embCol: String,
+      query: Array[Float], topK: Int, codes: Codes,
+      tieBreak: Seq[Column]): DataFrame = {
+    val inProbe = index.assigned
+      .filter(col("cluster").isin(probed.toIndexedSeq.map(Integer.valueOf): _*))
+    firstStage(index, codes, query) match {
+      case None => bruteForce(inProbe, embCol, query, topK, tieBreak)
+      case Some((qscore, rescore)) =>
+        // exact rescoring over the tiny candidate set only
+        bruteForce(inProbe.withColumn("qscore", qscore)
+            .orderBy(col("qscore").desc +: tieBreak: _*)
+            .limit(rescore), embCol, query, topK, tieBreak)
+          .drop("qscore")
+    }
+  }
+
+  /** The compressed score column and its `rescore` cut, if any. */
+  private def firstStage(index: IvfIndex, codes: Codes,
+      query: Array[Float]): Option[(Column, Int)] = codes match {
+    case Exact => None
+    case Sq8(rescore) =>
+      require(index.assigned.columns.contains("qvec"),
+        "index has no SQ8 codes; call withSq8 first")
+      // quantize the query with the same formula (driver-side, d
+      // floats); a zero query codes to zeros like sq8Code does
+      val m = query.map(x => math.abs(x.toDouble)).max
+      val qb =
+        if (m == 0) query.map(_ => 0L)
+        else query.map(x => math.floor(x * 127.0 / m + 0.5).toLong)
+      val qbNorm = math.sqrt(qb.map(x => (x * x).toDouble).sum)
+      Some((aggregate(
+          zip_with(col("qvec"), typedLit(qb.toSeq), (a, b) => a.cast("long") * b),
+          lit(0L), (acc, x) => acc + x).cast("double")
+        / (col("qnorm") * lit(qbNorm)), rescore))
+    case Pq(codebook, rescore) =>
+      require(index.assigned.columns.contains("pqcode"),
+        "index has no PQ codes; call withPq first")
+      val dsub = codebook.centers(0)(0).length
+      def lut(f: (Int, Array[Float]) => Double) =
+        Array.tabulate(codebook.m, codebook.centers(0).length) { (sub, c) =>
+          f(sub, codebook.centers(sub)(c))
+        }
+      val dotLut = lut { (sub, cent) =>
+        var s = 0.0; var i = 0
+        while (i < dsub) { s += query(sub * dsub + i).toDouble * cent(i); i += 1 }
+        s
+      }
+      val normLut = lut { (_, cent) =>
+        var s = 0.0; var i = 0
+        while (i < dsub) { s += cent(i).toDouble * cent(i); i += 1 }
+        s
+      }
+      val qNorm = math.sqrt(query.map(x => x.toDouble * x).sum)
+      Some((graft.functions.pq_adc_score(col("pqcode"), dotLut, normLut, qNorm),
+        rescore))
   }
 
   // ---- IVF-SQ8: scalar-quantized codes inside the cluster-pruned ----
@@ -490,7 +682,7 @@ object Ann {
   /** Per-vector symmetric int8 code: floor(x * 127/max|x| + 0.5) as
     * tinyint (same arithmetic as the oracled `ann_int8_topk` catalog
     * entry, narrowed to 1-byte storage). */
-  def sq8Code(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  def sq8Code(v: Column): Column = {
     val dv = transform(v, x => x.cast("double"))
     val m  = array_max(transform(dv, x => abs(x)))
     // zero vector: 127/0 = Inf, 0*Inf = NaN, and NaN→byte throws under
@@ -501,7 +693,7 @@ object Ann {
 
   /** Precomputed L2 norm of the code vector (so searches don't redo
     * the per-row norm reduction). */
-  private def sq8Norm(q: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def sq8Norm(q: Column): Column =
     sqrt(aggregate(q, lit(0L), (acc, x) => acc + x.cast("long") * x.cast("long"))
       .cast("double"))
 
@@ -515,52 +707,6 @@ object Ann {
     IvfIndex(index.centers, a)
   }
 
-  /** Two-stage IVF-SQ8 search: probe `nprobe` clusters, rank by the
-    * integer-domain quantized cosine (cheap: byte codes, long
-    * accumulate), keep the best `rescore` candidates, then re-rank
-    * exactly on the float embeddings and cut to `topK`. With
-    * `rescore >= topK` and SQ8's <1% score perturbation, recall vs the
-    * exact scan is near-total while the heavy scan never touches the
-    * float column. */
-  def searchIvfSq8(index: IvfIndex, embCol: String, query: Array[Float],
-      topK: Int, nprobe: Int, rescore: Int = 100,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    searchSq8On(index, rankClusters(index.centers, query).take(nprobe),
-      embCol, query, topK, rescore, tieBreak)
-
-  /** The SQ8 two-stage scan over an explicit probed-cluster set (shared
-    * by the flat and hierarchical rankings). */
-  private def searchSq8On(index: IvfIndex, probed: Array[Int],
-      embCol: String, query: Array[Float], topK: Int, rescore: Int,
-      tieBreak: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    require(index.assigned.columns.contains("qvec"),
-      "index has no SQ8 codes; call withSq8 first")
-    // quantize the query with the same formula (driver-side, d floats);
-    // a zero query codes to zeros like sq8Code does
-    val m = query.map(x => math.abs(x.toDouble)).max
-    val qb =
-      if (m == 0) query.map(_ => 0L)
-      else query.map(x => math.floor(x * 127.0 / m + 0.5).toLong)
-    val qbNorm = math.sqrt(qb.map(x => (x * x).toDouble).sum)
-    // tieBreak makes BOTH cuts deterministic under score collisions,
-    // mirroring bruteForce/searchIvf
-    val candidates = index.assigned
-      .filter(col("cluster").isin(probed.toIndexedSeq.map(Integer.valueOf): _*))
-      .withColumn("qscore",
-        aggregate(
-          zip_with(col("qvec"), typedLit(qb.toSeq), (a, b) => a.cast("long") * b),
-          lit(0L), (acc, x) => acc + x).cast("double")
-          / (col("qnorm") * lit(qbNorm)))
-      .orderBy(col("qscore").desc +: tieBreak: _*)
-      .limit(rescore)
-    // exact rescoring over the tiny candidate set only
-    candidates
-      .withColumn("score", cosine_sim(col(embCol), typedLit(query.toSeq)))
-      .orderBy(col("score").desc +: tieBreak: _*)
-      .limit(topK)
-      .drop("qscore")
-  }
-
   // ---- IVF-PQ: product-quantized codes inside the cluster-pruned ----
   // index — m bytes per vector (vs d·4 float, d int8): at d=64, m=8
   // that is 32× smaller than float32. Search is the same two-stage
@@ -572,83 +718,24 @@ object Ann {
     * subspace sub (m subspaces of d/m dims each). */
   final case class PqCodebook(m: Int, centers: Array[Array[Array[Float]]])
 
-  /** Fit m per-subspace codebooks with driver-local Lloyd's iterations
-    * on a bounded sample — PQ codebooks need a sketch of each
-    * subspace's density, not a full-table MLlib pass (same fit-side
-    * discipline as [[buildIvf]]). Sample rows stream once; subspaces
-    * fit in parallel on the driver. */
+  /** Fit m per-subspace codebooks with the driver-local [[lloyd]] on a
+    * bounded sample — PQ codebooks need a sketch of each subspace's
+    * density, not a full-table pass (same fit-side discipline as
+    * [[buildIvf]]). Sample rows stream once; subspaces fit one after
+    * another, each fanning its point chunks out over the Lloyd pool. */
   def fitPq(df: DataFrame, embCol: String, m: Int, codebookSize: Int = 256,
       iters: Int = 8, seed: Long = 42L, maxFitRows: Int = 20000): PqCodebook = {
-    val n = df.count()
-    val frac = math.min(1.0, maxFitRows * 1.2 / math.max(1L, n))
-    val rows =
-      (if (frac < 1.0) df.sample(withReplacement = false, frac, seed) else df)
-        .select(col(embCol)).limit(maxFitRows)
-        .collect().map(_.getSeq[Float](0).toArray)
+    val rows = fitSample(df, col(embCol), seed, maxFitRows)
+      .map(_.getSeq[Float](0).toArray)
     require(rows.nonEmpty, "fitPq: empty sample")
     val d = rows(0).length
     require(d % m == 0, s"fitPq: dim $d not divisible by m=$m")
     val dsub = d / m
     val centers = Array.tabulate(m) { sub =>
       val pts = rows.map(v => java.util.Arrays.copyOfRange(v, sub * dsub, (sub + 1) * dsub))
-      localKmeans(pts, codebookSize, iters, seed + sub)
+      lloyd(pts, codebookSize, iters, seed + sub)
     }
     PqCodebook(m, centers)
-  }
-
-  /** Plain Lloyd's on driver-local points (sample-sized by
-    * construction). Deterministic seeded init from k DISTINCT point
-    * indices (a seeded shuffle): sampling indices with replacement
-    * would duplicate initial centers with near-certainty at k=256
-    * over a 20k sample (birthday effect), and duplicated centroids
-    * converge to duplicated codewords, shrinking the effective
-    * codebook and recall (ADVICE round 5). Empty clusters keep their
-    * previous center (they simply never win assignments). */
-  private def localKmeans(points: Array[Array[Float]], k: Int,
-      iters: Int, seed: Long): Array[Array[Float]] = {
-    val rnd = new scala.util.Random(seed)
-    val dsub = points(0).length
-    val init = rnd.shuffle((0 until points.length).toVector)
-    val centers = Array.tabulate(k)(i =>
-      points(if (points.length >= k) init(i) else i % points.length).clone())
-    val assign = new Array[Int](points.length)
-    var it = 0
-    while (it < iters) {
-      var p = 0
-      while (p < points.length) {
-        val v = points(p)
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < k) {
-          var dist = 0.0; var i = 0
-          val cent = centers(c)
-          while (i < dsub) { val df = v(i) - cent(i); dist += df * df; i += 1 }
-          if (dist < bestD) { bestD = dist; best = c }
-          c += 1
-        }
-        assign(p) = best
-        p += 1
-      }
-      val sums = Array.ofDim[Double](k, dsub)
-      val counts = new Array[Int](k)
-      p = 0
-      while (p < points.length) {
-        val c = assign(p); counts(c) += 1
-        var i = 0
-        while (i < dsub) { sums(c)(i) += points(p)(i); i += 1 }
-        p += 1
-      }
-      var c = 0
-      while (c < k) {
-        if (counts(c) > 0) {
-          var i = 0
-          while (i < dsub) { centers(c)(i) = (sums(c)(i) / counts(c)).toFloat; i += 1 }
-        }
-        c += 1
-      }
-      it += 1
-    }
-    centers
   }
 
   /** Attach PQ codes to an IVF assignment: the persisted index then
@@ -657,67 +744,6 @@ object Ann {
   def withPq(index: IvfIndex, embCol: String, codebook: PqCodebook): IvfIndex =
     IvfIndex(index.centers, index.assigned.withColumn("pqcode",
       graft.functions.pq_encode(col(embCol), codebook.centers)))
-
-  /** Two-stage IVF-PQ search: probe `nprobe` clusters, ADC-rank the m
-    * byte codes via per-query lookup tables, keep `rescore`
-    * candidates, re-rank exactly on the float embeddings. With
-    * exhaustive probe + rescore the result is exact (the ADC stage
-    * only orders candidates that all survive the cut). */
-  def searchIvfPq(index: IvfIndex, embCol: String, query: Array[Float],
-      codebook: PqCodebook, topK: Int, nprobe: Int, rescore: Int = 100,
-      tieBreak: Seq[org.apache.spark.sql.Column] = Nil): DataFrame =
-    searchPqOn(index, rankClusters(index.centers, query).take(nprobe),
-      embCol, query, codebook, topK, rescore, tieBreak)
-
-  /** The PQ/ADC two-stage scan over an explicit probed-cluster set
-    * (shared by the flat and hierarchical rankings). */
-  private def searchPqOn(index: IvfIndex, probed: Array[Int],
-      embCol: String, query: Array[Float], codebook: PqCodebook,
-      topK: Int, rescore: Int,
-      tieBreak: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    require(index.assigned.columns.contains("pqcode"),
-      "index has no PQ codes; call withPq first")
-    val dsub = codebook.centers(0)(0).length
-    val dotLut = Array.tabulate(codebook.m, codebook.centers(0).length) { (sub, c) =>
-      val cent = codebook.centers(sub)(c)
-      var s = 0.0; var i = 0
-      while (i < dsub) { s += query(sub * dsub + i).toDouble * cent(i); i += 1 }
-      s
-    }
-    val normLut = Array.tabulate(codebook.m, codebook.centers(0).length) { (sub, c) =>
-      val cent = codebook.centers(sub)(c)
-      var s = 0.0; var i = 0
-      while (i < dsub) { s += cent(i).toDouble * cent(i); i += 1 }
-      s
-    }
-    val qNorm = math.sqrt(query.map(x => x.toDouble * x).sum)
-    val adc = graft.functions.pq_adc_score(col("pqcode"), dotLut, normLut, qNorm)
-    index.assigned
-      .filter(col("cluster").isin(probed.toIndexedSeq.map(Integer.valueOf): _*))
-      .withColumn("qscore", adc)
-      .orderBy(col("qscore").desc +: tieBreak: _*)
-      .limit(rescore)
-      .withColumn("score", cosine_sim(col(embCol), typedLit(query.toSeq)))
-      .orderBy(col("score").desc +: tieBreak: _*)
-      .limit(topK)
-      .drop("qscore")
-  }
-
-  /** Centroid ranking by cosine to the query (driver-side; centers are
-    * k·d floats). */
-  private def rankClusters(centers: Array[Array[Float]],
-      query: Array[Float]): Array[Int] = {
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < math.min(a.length, b.length)) {
-        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i); nb += b(i).toDouble * b(i)
-        i += 1
-      }
-      if (na == 0 || nb == 0) 0.0 else d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    centers.zipWithIndex.sortBy { case (c, _) => -cos(c, query) }.map(_._2)
-  }
 
   /** Build-once / search-many: persist the assignment partitioned by
     * cluster (searches then prune at the directory level) plus the
@@ -740,15 +766,16 @@ object Ann {
     IvfIndex(centers, spark.read.parquet(s"$path/assigned"))
   }
 
+  // ---- the batched k-NN join ----
+
   /** IVF-accelerated k-NN JOIN — the batched ANN path for a TABLE of
     * query vectors. The brute-force k-NN join scores every
     * (query, row) pair: |Q|·n work behind a cross join. This routes
-    * each query to its best `nprobe` clusters and scores only those:
-    *  1. rank centers per query against the BROADCAST center table
-    *     (k·d floats — broadcast-class by construction), cut to
-    *     `nprobe` with the bounded [[graft.functions.BoundedTopK]]
-    *     aggregate so the exchange carries |Q|·nprobe probe pairs,
-    *     never |Q|·k;
+    * each query to its best `nprobe` clusters ([[probesRanked]]) and
+    * scores only those:
+    *  1. the flat probe ranking — |Q|·k map-side cosine rows, cut to
+    *     `nprobe` with the bounded [[BoundedTopK]] aggregate so the
+    *     exchange carries |Q|·nprobe probe pairs, never |Q|·k;
     *  2. EQUI-join the (query, cluster) probes with the assignment on
     *     cluster id — Σ_q (probed cluster sizes) rows scored, no
     *     cartesian anywhere;
@@ -771,152 +798,22 @@ object Ann {
     * entrypoint is for indexes that are flat by construction. */
   def knnJoinIvf(index: IvfIndex, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
-      topK: Int, nprobe: Int, excludeSelf: Boolean = false): DataFrame = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    require(qIdCol != "cluster" && qEmbCol != "cluster",
-      "knnJoinIvf: query columns may not be named 'cluster'")
-    val q = queries.select(col(qIdCol), col(qEmbCol))
-    val probes = flatProbesRanked(index, q, qIdCol, qEmbCol, nprobe)
-      .drop("__graft_pr")
-    knnScoreProbes(index, probes, q, embCol, idCol, qIdCol, qEmbCol,
-      topK, excludeSelf)
-  }
+      topK: Int, nprobe: Int, excludeSelf: Boolean = false): DataFrame =
+    knnJoin(Flat(index), embCol, idCol, queries, qIdCol, qEmbCol, topK,
+      nprobe, excludeSelf)
 
-  /** The flat probe ranking as (qIdCol, __graft_probe, __graft_pr),
-    * rank 1 = best under [[graft.functions.BoundedTopK]]'s total
-    * order (csim DESC, cluster ASC) — shared by [[knnJoinIvf]] (which
-    * drops the rank) and the all-levels tuner (whose per-level prefix
-    * must be, by construction, exactly the probe set the join at that
-    * nprobe uses). */
-  private def flatProbesRanked(index: IvfIndex, q: DataFrame,
-      qIdCol: String, qEmbCol: String, nprobe: Int): DataFrame = {
-    val spark = index.assigned.sparkSession
-    import spark.implicits._
-    val centersDf = broadcast(
-      index.centers.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i.toLong, c.toIndexedSeq) }
-        .toDF("__graft_cl", "__graft_center"))
-    q.crossJoin(centersDf)
-      .withColumn("__graft_csim", cosine_sim(col(qEmbCol), col("__graft_center")))
-      .groupBy(col(qIdCol))
-      .agg(graft.functions.BoundedTopK.top_k_by(
-        col("__graft_csim"), col("__graft_cl"), nprobe).as("__graft_top"))
-      .select(col(qIdCol), posexplode(col("__graft_top.id"))
-        .as(Seq("__graft_pos", "__graft_probe")))
-      .select(col(qIdCol), col("__graft_probe"),
-        (col("__graft_pos") + 1).as("__graft_pr"))
-  }
-
-  /** The shared scoring tail of the batched joins: equi-join the
-    * (query, probed cluster) pairs with the assignment, score, and cut
-    * per query with the bounded top-k aggregate. */
-  private def knnScoreProbes(index: IvfIndex, probes: DataFrame,
-      q: DataFrame, embCol: String, idCol: String, qIdCol: String,
-      qEmbCol: String, topK: Int, excludeSelf: Boolean): DataFrame = {
-    val withVec = probes.join(q, qIdCol) // carry the query vector
-    // the probe ids ride the LongType BoundedTopK struct but cluster
-    // ids are ints (argmax over k centers) — cast the SMALL probe side
-    // so the assignment side keys on the bare partition column: the
-    // equi-join and its DPP pruning key then align castless on the
-    // scan, whether the assignment is in-memory or the loaded
-    // partitionBy(cluster) artifact (whose directory values infer int)
-    val scored = withVec.join(index.assigned,
-        withVec("__graft_probe").cast("int") === index.assigned("cluster"))
-      .withColumn("__graft_score", cosine_sim(col(embCol), col(qEmbCol)))
-    val kept =
-      if (excludeSelf) scored.filter(col(idCol) =!= col(qIdCol)) else scored
-    kept
-      .groupBy(col(qIdCol))
-      .agg(graft.functions.BoundedTopK.top_k_by(
-        col("__graft_score"), col(idCol), topK).as("__graft_nn"))
-      .select(col(qIdCol), posexplode(col("__graft_nn")).as(Seq("__graft_pos", "__graft_s")))
-      .select(col(qIdCol),
-        col("__graft_s.id").as(idCol),
-        col("__graft_s.ord").as("score"),
-        (col("__graft_pos") + 1).as("rk"))
-  }
-
-  /** Batched k-NN join through the TWO-LEVEL ranking — [[knnJoinIvf]]
-    * for hierarchical (SemDeDup-scale) k, where the flat ranking's
-    * |Q|·k stage is the non-starter. Every stage is an equi-join or a
-    * bounded aggregate:
-    *  1. rank the k1 ≈ √k coarse cells per query (|Q|·k1 rows against
-    *     the broadcast coarse table), cut to `nprobeCoarse`;
-    *  2. EQUI-join the (query, cell) pairs with the sub-center table
-    *     keyed by cell (|Q|·nprobeCoarse·k2 rows), cut to `nprobe`
-    *     global clusters;
-    *  3. the shared scoring tail (cluster equi-join + bounded top-k).
-    * Per-query ranking work is O((k1 + nprobeCoarse·k2)·d) — the
-    * [[searchIvfHier]] budget, batched. Exhaustive settings
+  /** [[knnJoinIvf]] through the TWO-LEVEL ranking, for hierarchical
+    * (SemDeDup-scale) k, where the flat ranking's |Q|·k stage is the
+    * non-starter. Per-query ranking work is O((k1 + nprobeCoarse·k2)·d)
+    * — the [[searchIvfHier]] budget, batched. Exhaustive settings
     * (nprobeCoarse=k1, nprobe=k1·k2) are exact. */
   def knnJoinIvfHier(h: HierIvf, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       topK: Int, nprobeCoarse: Int, nprobe: Int,
       excludeSelf: Boolean = false,
-      maxCenterBroadcastBytes: Long = 256L << 20): DataFrame = {
-    require(qIdCol != "cluster" && qEmbCol != "cluster",
-      "knnJoinIvfHier: query columns may not be named 'cluster'")
-    val q = queries.select(col(qIdCol), col(qEmbCol))
-    val probes = hierProbesRanked(h, q, qIdCol, qEmbCol, nprobeCoarse,
-        nprobe, maxCenterBroadcastBytes)
-      .drop("__graft_pr")
-    knnScoreProbes(h.index, probes, q, embCol, idCol, qIdCol, qEmbCol,
-      topK, excludeSelf)
-  }
-
-  /** The two-level probe ranking as (qIdCol, __graft_probe,
-    * __graft_pr) — the hier twin of [[flatProbesRanked]], shared by
-    * [[knnJoinIvfHier]] and the all-levels hier tuner. Rank is within
-    * the pooled sub-center ranking of the FIXED coarse cut, under the
-    * bounded top-k's total order (ssim DESC, cluster ASC). */
-  private def hierProbesRanked(h: HierIvf, q: DataFrame,
-      qIdCol: String, qEmbCol: String, nprobeCoarse: Int, nprobe: Int,
-      maxCenterBroadcastBytes: Long): DataFrame = {
-    val spark = h.index.assigned.sparkSession
-    import spark.implicits._
-    val coarseDf = broadcast(
-      h.coarse.toIndexedSeq.zipWithIndex
-        .map { case (c, i) => (i.toLong, c.toIndexedSeq) }
-        .toDF("__graft_cell", "__graft_ccenter"))
-    // flat sub-center table keyed by coarse cell (cluster id = cell·k2+j).
-    // The coarse table is always k1 ≈ √k rows — broadcast-class by
-    // construction — but THIS one is all k sub-centers: ~3 GB at
-    // k≈2^20, d=768, past any sane broadcast. Under the size bound we
-    // broadcast (zero exchange on the probe side); over it the rows
-    // are distributed via parallelize and the cell equi-join shuffles
-    // |Q|·nprobeCoarse probe rows on `__graft_cell` instead — the
-    // probe side is already keyed by cell, so the exchange is the
-    // bounded probe set, never the corpus.
-    val subRows = h.index.centers.toIndexedSeq.zipWithIndex
-      .map { case (c, id) => ((id / h.k2).toLong, id.toLong, c.toIndexedSeq) }
-    val d = if (h.index.centers.isEmpty) 0 else h.index.centers(0).length
-    val subBytes = h.index.centers.length.toLong * (4L * d + 24L)
-    val subDf =
-      if (subBytes <= maxCenterBroadcastBytes)
-        broadcast(subRows.toDF("__graft_cell", "__graft_cl", "__graft_center"))
-      else {
-        val slices = math.max(1, (subBytes / (32L << 20)).toInt)
-        spark.createDataset(spark.sparkContext.parallelize(subRows, slices))
-          .toDF("__graft_cell", "__graft_cl", "__graft_center")
-      }
-    val cellProbes = q.crossJoin(coarseDf)
-      .withColumn("__graft_csim", cosine_sim(col(qEmbCol), col("__graft_ccenter")))
-      .groupBy(col(qIdCol))
-      .agg(graft.functions.BoundedTopK.top_k_by(
-        col("__graft_csim"), col("__graft_cell"), nprobeCoarse).as("__graft_top"))
-      .select(col(qIdCol), explode(col("__graft_top.id")).as("__graft_cell"))
-      .join(q, qIdCol)
-    cellProbes.join(subDf, "__graft_cell")
-      .withColumn("__graft_ssim", cosine_sim(col(qEmbCol), col("__graft_center")))
-      .groupBy(col(qIdCol))
-      .agg(graft.functions.BoundedTopK.top_k_by(
-        col("__graft_ssim"), col("__graft_cl"), nprobe).as("__graft_top"))
-      .select(col(qIdCol), posexplode(col("__graft_top.id"))
-        .as(Seq("__graft_pos", "__graft_probe")))
-      .select(col(qIdCol), col("__graft_probe"),
-        (col("__graft_pos") + 1).as("__graft_pr"))
-  }
+      maxCenterBroadcastBytes: Long = 256L << 20): DataFrame =
+    knnJoin(TwoLevel(h, nprobeCoarse, maxCenterBroadcastBytes), embCol, idCol,
+      queries, qIdCol, qEmbCol, topK, nprobe, excludeSelf)
 
   /** Routed batched k-NN join — THE entrypoint when the index came
     * from [[buildIvfAuto]] / [[buildIvfHierarchical]]: picks the flat
@@ -932,18 +829,60 @@ object Ann {
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       topK: Int, nprobe: Int, nprobeCoarse: Int = 0,
       excludeSelf: Boolean = false, hierThreshold: Int = 4096,
-      maxCenterBroadcastBytes: Long = 256L << 20): DataFrame =
-    if (h.index.centers.length <= hierThreshold)
-      knnJoinIvf(h.index, embCol, idCol, queries, qIdCol, qEmbCol,
-        topK, nprobe, excludeSelf)
-    else {
-      val coarseProbes =
+      maxCenterBroadcastBytes: Long = 256L << 20): DataFrame = {
+    val ranking =
+      if (h.index.centers.length <= hierThreshold) Flat(h.index)
+      else TwoLevel(h,
         if (nprobeCoarse > 0) nprobeCoarse
-        else math.min(h.k1,
-          math.ceil(nprobe.toDouble / math.max(1, h.k2)).toInt + 1)
-      knnJoinIvfHier(h, embCol, idCol, queries, qIdCol, qEmbCol,
-        topK, coarseProbes, nprobe, excludeSelf, maxCenterBroadcastBytes)
-    }
+        else math.min(h.k1, math.ceil(nprobe.toDouble / math.max(1, h.k2)).toInt + 1),
+        maxCenterBroadcastBytes)
+    knnJoin(ranking, embCol, idCol, queries, qIdCol, qEmbCol, topK, nprobe,
+      excludeSelf)
+  }
+
+  /** The one join body: the batched probe ranking, then the scoring
+    * tail — equi-join the (query, probed cluster) pairs with the
+    * assignment ([[scoreProbes]]), cut per query with the bounded
+    * top-k aggregate. */
+  private def knnJoin(r: Ranking, embCol: String, idCol: String,
+      queries: DataFrame, qIdCol: String, qEmbCol: String, topK: Int,
+      nprobe: Int, excludeSelf: Boolean): DataFrame = {
+    require(qIdCol != "cluster" && qEmbCol != "cluster",
+      "knnJoin: query columns may not be named 'cluster'")
+    val q = queries.select(col(qIdCol), col(qEmbCol))
+    val scored = scoreProbes(r.index,
+      probesRanked(r, q, qIdCol, qEmbCol, nprobe).drop("__graft_pr"),
+      q, embCol, qIdCol, qEmbCol)
+    val kept =
+      if (excludeSelf) scored.filter(col(idCol) =!= col(qIdCol)) else scored
+    kept
+      .groupBy(col(qIdCol))
+      .agg(BoundedTopK.top_k_by(
+        col("__graft_score"), col(idCol), topK).as("__graft_nn"))
+      .select(col(qIdCol), posexplode(col("__graft_nn")).as(Seq("__graft_pos", "__graft_s")))
+      .select(col(qIdCol),
+        col("__graft_s.id").as(idCol),
+        col("__graft_s.ord").as("score"),
+        (col("__graft_pos") + 1).as("rk"))
+  }
+
+  /** Every row of every probed cluster, with the query vector and its
+    * exact cosine `__graft_score`. The probe ids ride the LongType
+    * BoundedTopK struct but cluster ids are ints (argmax over k
+    * centers) — cast the SMALL probe side so the assignment side keys
+    * on the bare partition column: the equi-join and its DPP pruning
+    * key then align castless on the scan, whether the assignment is
+    * in-memory or the loaded partitionBy(cluster) artifact (whose
+    * directory values infer int). */
+  private def scoreProbes(index: IvfIndex, probes: DataFrame, q: DataFrame,
+      embCol: String, qIdCol: String, qEmbCol: String): DataFrame = {
+    val withVec = probes.join(q, qIdCol) // carry the query vector
+    withVec.join(index.assigned,
+        withVec("__graft_probe").cast("int") === index.assigned("cluster"))
+      .withColumn("__graft_score", cosine_sim(col(embCol), col(qEmbCol)))
+  }
+
+  // ---- the nprobe tuner ----
 
   /** Measure-then-choose the production `nprobe` for THIS corpus:
     * recall-vs-nprobe is a property of the data (an isotropic corpus
@@ -976,76 +915,6 @@ object Ann {
     (np, rec)
   }
 
-  /** Past this probe-pool size the all-levels tuner evaluation (one
-    * row per candidate per level ≥ its probe rank — ~cut/2 amplification
-    * of the exhaustive reference) would out-cost the binary search it
-    * replaces; below it, ONE windowed action replaces the reference
-    * build + one join+count action per binary-search step. */
-  private val AllLevelsMax = 64
-
-  /** Per-level hit counts for the all-levels tuner path, ONE action:
-    * `probesRanked` is (qIdCol, __graft_probe, __graft_pr) — the FULL
-    * probe ranking (rank 1 = best) whose prefix of length n is, by
-    * [[graft.functions.BoundedTopK]]'s total order (ord DESC, id ASC),
-    * exactly the probe set a knnJoin at nprobe=n would use. A
-    * candidate row in the cluster ranked pr participates in every
-    * level n ≥ pr, so per-level top-k is one explode + one
-    * row_number window under the SAME total order (score DESC, id
-    * ASC) the bounded top-k aggregate applies — making level n's
-    * top-k bit-identical to the knnJoin's. Hits are counted against
-    * level maxLevel (the exhaustive reference — identical to the
-    * separate exact build the binary search used). Returns
-    * n -> hits(n); recall(n) = hits(n) / (nq·topK), and
-    * hits(maxLevel) = nq·topK exactly (the reference intersected with
-    * itself), preserving the old contract that recall at the top
-    * endpoint is 1.0 by construction. `exactRef` overrides the
-    * reference with an external (qIdCol, idCol) top-k frame — the
-    * hier tuner's TRUE-exact reference spans the whole index, not the
-    * fixed coarse cut these levels probe, so recall(maxLevel) there
-    * is legitimately < 1. */
-  private def hitsByLevel(index: IvfIndex, probesRanked: DataFrame,
-      q: DataFrame, embCol: String, idCol: String, qIdCol: String,
-      qEmbCol: String, topK: Int, maxLevel: Int,
-      exactRef: Option[DataFrame] = None): Map[Int, Long] = {
-    import org.apache.spark.sql.expressions.Window
-    val withVec = probesRanked.join(q, qIdCol)
-    val scored = withVec.join(index.assigned,
-        withVec("__graft_probe").cast("int") === index.assigned("cluster"))
-      .withColumn("__graft_score", cosine_sim(col(embCol), col(qEmbCol)))
-      .select(col(qIdCol), col(idCol), col("__graft_score"), col("__graft_pr"))
-    val lev = scored.withColumn("__graft_n",
-      explode(sequence(col("__graft_pr"), lit(maxLevel))))
-    val w = Window.partitionBy(col("__graft_n"), col(qIdCol))
-      .orderBy(col("__graft_score").desc, col(idCol).asc)
-    val top = lev.withColumn("__graft_rk", row_number().over(w))
-      .filter(col("__graft_rk") <= topK)
-      .select(col("__graft_n"), col(qIdCol), col(idCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val exact = exactRef.getOrElse(
-          top.filter(col("__graft_n") === maxLevel).select(col(qIdCol), col(idCol)))
-        .select(col(qIdCol).as("__graft_eq"), col(idCol).as("__graft_eid"))
-      top.join(exact, top(qIdCol) === col("__graft_eq") &&
-          top(idCol) === col("__graft_eid"))
-        .groupBy("__graft_n").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    } finally top.unpersist()
-  }
-
-  /** Shared choose-per-target tail of the all-levels tuners: the
-    * smallest level meeting the target (= the binary search's result
-    * by recall monotonicity — level-n candidate sets grow
-    * superset-wise under a total order, so recall never decreases),
-    * else the top endpoint with its measured recall. */
-  private def chooseFromLevels(recalls: Map[Int, Double], maxLevel: Int,
-      targets: Seq[Double]): Seq[(Double, Int, Double)] =
-    targets.map { target =>
-      (1 to maxLevel).find(n => recalls.getOrElse(n, 0.0) >= target) match {
-        case Some(n) => (target, n, recalls(n))
-        case None    => (target, maxLevel, recalls.getOrElse(maxLevel, 0.0))
-      }
-    }
-
   /** [[tuneNprobe]] for a WHOLE frontier of recall targets in one
     * pass: the exhaustive nprobe=k reference — by far the most
     * expensive plan in the tune — is built and persisted ONCE, and
@@ -1059,82 +928,14 @@ object Ann {
     * 1.0 by construction — the approximate plan AT nprobe=k IS the
     * reference — so the search never measures the top endpoint.
     * Returns one (target, nprobe, recall) row per input target, input
-    * order preserved.
-    *
-    * r21: for k ≤ [[AllLevelsMax]] the whole frontier is measured in
-    * ONE windowed action ([[hitsByLevel]]) — recall at EVERY nprobe
-    * level from a single scored pass, instead of the reference build
-    * plus one join+count job round per binary-search step. The chosen
-    * (nprobe, recall) per target is identical (recall is monotone in
-    * nprobe — candidate sets grow superset-wise — so smallest-n-
-    * meeting-target IS the binary search's answer, and the hit counts
-    * come from the same total orders). Past the bound the binary
-    * search remains — at SemDeDup-scale cuts the level explosion
-    * would out-cost it. */
+    * order preserved. For k ≤ [[AllLevelsMax]] every level is measured
+    * in one action instead (see [[tuneFrontier]]). */
   def tuneNprobeFrontier(index: IvfIndex, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       topK: Int, targets: Seq[Double],
-      maxSample: Int = 200): Seq[(Double, Int, Double)] = {
-    require(targets.nonEmpty, "tuneNprobeFrontier: no targets")
-    val k = index.centers.length
-    // internal names so a corpus-as-queries call (qIdCol == idCol) never
-    // produces an ambiguous two-column result. The sample is PINNED on
-    // the driver (bounded by maxSample, by design): a bare
-    // limit(maxSample) has no defined row set, so a lost cached block
-    // recomputed mid-tune could select DIFFERENT rows — exact and
-    // approx recall would then be measured over disjoint query panels
-    // (r12 review). A LocalRelation recomputes to itself, always.
-    val sampled = queries
-      .select(col(qIdCol).as("__tune_qid"), col(qVecCol).as("__tune_qvec"))
-      .limit(maxSample)
-    val spark = queries.sparkSession
-    val sample = spark.createDataFrame(
-      java.util.Arrays.asList(sampled.collect(): _*), sampled.schema)
-    val nq = sample.count().toDouble
-    require(nq > 0, "tuneNprobe: empty query sample")
-    if (k <= AllLevelsMax) {
-      // all-levels path: the full probe ranking (the same |Q|·k
-      // map-side cosine stage the exhaustive reference paid anyway),
-      // then every level's recall from one windowed action
-      val probesRanked = flatProbesRanked(index, sample,
-        "__tune_qid", "__tune_qvec", nprobe = k)
-      val hits = hitsByLevel(index, probesRanked, sample, embCol, idCol,
-        "__tune_qid", "__tune_qvec", topK, k)
-      val recalls = (1 to k)
-        .map(n => n -> hits.getOrElse(n, 0L).toDouble / (nq * topK)).toMap
-      chooseFromLevels(recalls, k, targets)
-    } else {
-    val exact = knnJoinIvf(index, embCol, idCol, sample, "__tune_qid",
-        "__tune_qvec", topK, nprobe = k)
-      .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val cache = scala.collection.mutable.Map.empty[Int, Double]
-      def recallAt(nprobe: Int): Double = cache.getOrElseUpdate(nprobe, {
-        val approx = knnJoinIvf(index, embCol, idCol, sample, "__tune_qid",
-            "__tune_qvec", topK, nprobe)
-          .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid"))
-        val hits = exact.join(approx, Seq("__tq", "__tid")).count()
-        hits.toDouble / (nq * topK)
-      })
-      targets.map { target =>
-        var lo = 1; var hi = k // invariant: recall(hi) >= target (recall(k)=1)
-        val recLo = recallAt(lo)
-        if (recLo >= target) (target, lo, recLo)
-        else {
-          var recHi = 1.0
-          while (hi - lo > 1) {
-            val mid = lo + (hi - lo) / 2
-            val r = recallAt(mid)
-            if (r >= target) { hi = mid; recHi = r }
-            else lo = mid
-          }
-          (target, hi, recHi)
-        }
-      }
-    } finally exact.unpersist()
-    }
-  }
+      maxSample: Int = 200): Seq[(Double, Int, Double)] =
+    tuneFrontier(Flat(index), index.centers.length, None, embCol, idCol,
+      queries, qIdCol, qVecCol, topK, targets, maxSample)
 
   /** [[tuneNprobe]] for hierarchical indexes at SemDeDup-scale k,
     * where the flat tuner's exhaustive-reference join (|Q|·k ranking
@@ -1171,11 +972,49 @@ object Ann {
   def tuneNprobeHierFrontier(h: HierIvf, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       nprobeCoarse: Int, topK: Int, targets: Seq[Double],
-      maxSample: Int = 200): Seq[(Double, Int, Double)] = {
-    require(targets.nonEmpty, "tuneNprobeHierFrontier: no targets")
-    val k = h.index.centers.length
-    val cutMax = math.min(k, nprobeCoarse * h.k2)
-    // sample pinned on the driver — see [[tuneNprobe]]'s rationale
+      maxSample: Int = 200): Seq[(Double, Int, Double)] =
+    tuneFrontier(TwoLevel(h, nprobeCoarse),
+      math.min(h.index.centers.length, nprobeCoarse * h.k2),
+      Some(TwoLevel(h, h.k1)), embCol, idCol, queries, qIdCol, qVecCol, topK,
+      targets, maxSample)
+
+  /** Past this probe-pool size the all-levels tuner evaluation (one
+    * row per candidate per level ≥ its probe rank — ~cut/2 amplification
+    * of the exhaustive reference) would out-cost the binary search it
+    * replaces; below it, ONE windowed action replaces the reference
+    * build + one join+count action per binary-search step. */
+  private val AllLevelsMax = 64
+
+  /** The one tuner body: the smallest nprobe in 1..cutMax of ranking
+    * `r` whose recall@topK meets each target, else (cutMax,
+    * recall(cutMax)).
+    *
+    * The query sample is PINNED on the driver (bounded by maxSample,
+    * by design): a bare limit(maxSample) has no defined row set, so a
+    * lost cached block recomputed mid-tune could select DIFFERENT rows
+    * — exact and approx recall would then be measured over disjoint
+    * query panels (r12 review). A LocalRelation recomputes to itself,
+    * always. Internal column names keep a corpus-as-queries call
+    * (qIdCol == idCol) from producing an ambiguous two-column result.
+    *
+    * The recall reference is `exactBy` at its full width (the hier
+    * tuner's TRUE-exact frame, which spans the whole index, not the
+    * fixed coarse cut the levels probe), or — when None — the top
+    * level of `r` itself, whose recall is then 1.0 by construction and
+    * seeded, never measured. Recall per level comes from:
+    *  - cutMax ≤ [[AllLevelsMax]]: ONE windowed action
+    *    ([[hitsByLevel]]) over the full probe ranking;
+    *  - otherwise: a memoized binary search, one join+count per
+    *    probed level, sharing measurements across targets.
+    * Both choose the same nprobe: recall is monotone in nprobe
+    * (level-n candidate sets grow superset-wise under a total order),
+    * so the binary search's answer is the smallest level meeting the
+    * target. */
+  private def tuneFrontier(r: Ranking, cutMax: Int, exactBy: Option[Ranking],
+      embCol: String, idCol: String, queries: DataFrame, qIdCol: String,
+      qVecCol: String, topK: Int, targets: Seq[Double],
+      maxSample: Int): Seq[(Double, Int, Double)] = {
+    require(targets.nonEmpty, "tuneNprobeFrontier: no targets")
     val sampled = queries
       .select(col(qIdCol).as("__tune_qid"), col(qVecCol).as("__tune_qvec"))
       .limit(maxSample)
@@ -1183,77 +1022,96 @@ object Ann {
     val sample = spark.createDataFrame(
       java.util.Arrays.asList(sampled.collect(): _*), sampled.schema)
     val nq = sample.count().toDouble
-    require(nq > 0, "tuneNprobeHier: empty query sample")
-    val exact = knnJoinIvfHier(h, embCol, idCol, sample, "__tune_qid",
-        "__tune_qvec", topK, nprobeCoarse = h.k1, nprobe = k)
-      .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    require(nq > 0, "tuneNprobe: empty query sample")
+    def topKAt(rr: Ranking, nprobe: Int): DataFrame =
+      knnJoin(rr, embCol, idCol, sample, "__tune_qid", "__tune_qvec", topK,
+          nprobe, excludeSelf = false)
+        .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid"))
+    val allLevels = cutMax <= AllLevelsMax
+    val ref = exactBy.map(e => topKAt(e, e.index.centers.length))
+      .orElse(if (allLevels) None else Some(topKAt(r, cutMax)))
+    ref.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
     try {
-      if (cutMax <= AllLevelsMax) {
-        // all-levels path (see [[tuneNprobeFrontier]]): every level of
-        // the FIXED coarse cut measured from one windowed action,
-        // against the persisted TRUE-exact reference (recall(cutMax)
-        // may legitimately miss a target — the raise-nprobeCoarse
-        // signal, preserved by chooseFromLevels' top-endpoint branch)
-        val probesRanked = hierProbesRanked(h, sample, "__tune_qid",
-          "__tune_qvec", nprobeCoarse, cutMax, 256L << 20)
-        val hits = hitsByLevel(h.index, probesRanked, sample, embCol, idCol,
-          "__tune_qid", "__tune_qvec", topK, cutMax,
-          exactRef = Some(exact.select(col("__tq").as("__tune_qid"),
-            col("__tid").as(idCol))))
-        val recalls = (1 to cutMax)
-          .map(n => n -> hits.getOrElse(n, 0L).toDouble / (nq * topK)).toMap
-        chooseFromLevels(recalls, cutMax, targets)
-      } else {
-      val cache = scala.collection.mutable.Map.empty[Int, Double]
-      def recallAt(nprobe: Int): Double = cache.getOrElseUpdate(nprobe, {
-        val approx = knnJoinIvfHier(h, embCol, idCol, sample, "__tune_qid",
-            "__tune_qvec", topK, nprobeCoarse = nprobeCoarse, nprobe = nprobe)
-          .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid"))
-        exact.join(approx, Seq("__tq", "__tid")).count().toDouble / (nq * topK)
-      })
+      val recallAt: Int => Double =
+        if (allLevels) {
+          // the full probe ranking (the same |Q|·k map-side cosine
+          // stage the exhaustive reference pays anyway), then every
+          // level's recall from one windowed action
+          val hits = hitsByLevel(r.index,
+            probesRanked(r, sample, "__tune_qid", "__tune_qvec", cutMax),
+            sample, embCol, idCol, topK, cutMax, ref)
+          n => hits.getOrElse(n, 0L).toDouble / (nq * topK)
+        } else {
+          val cache = scala.collection.mutable.Map.empty[Int, Double]
+          if (exactBy.isEmpty) cache(cutMax) = 1.0
+          n => cache.getOrElseUpdate(n,
+            ref.get.join(topKAt(r, n), Seq("__tq", "__tid")).count().toDouble /
+              (nq * topK))
+        }
       targets.map { target =>
         val recMax = recallAt(cutMax)
         if (recMax < target) (target, cutMax, recMax)
         else {
-          var lo = 1; var hi = cutMax
+          var lo = 1; var hi = cutMax // invariant: recall(hi) >= target
           var recHi = recMax
           val recLo = recallAt(lo)
           if (recLo >= target) (target, lo, recLo)
           else {
             while (hi - lo > 1) {
               val mid = lo + (hi - lo) / 2
-              val r = recallAt(mid)
-              if (r >= target) { hi = mid; recHi = r }
+              val rec = recallAt(mid)
+              if (rec >= target) { hi = mid; recHi = rec }
               else lo = mid
             }
             (target, hi, recHi)
           }
         }
       }
-      }
-    } finally exact.unpersist()
+    } finally ref.foreach(_.unpersist())
   }
 
-  /** Incremental index maintenance: assign NEW rows against an
-    * existing index's FROZEN centers and append them to the persisted
-    * partitioned layout — the update path of build-once/search-many.
-    * Assignment with frozen centers is a pure function of the row (the
-    * same codegen'd argmax scan as the original build), so appended
-    * rows land in exactly the cluster a full rebuild with these
-    * centers would give them, and a reloaded index immediately serves
-    * old+new rows through the same directory-level pruning. Center
-    * drift is handled by periodic re-fit + rewrite, the standard IVF
-    * deployment cadence — appends never mutate existing files. */
-  def appendToIvf(index: IvfIndex, newRows: DataFrame, embCol: String,
-      path: String): Unit =
-    appendAssigned(index, assignByCosine(newRows, embCol, index.centers), path)
+  /** Per-level hit counts for the all-levels tuner path, ONE action:
+    * `probesRanked` is (__tune_qid, __graft_probe, __graft_pr) — the
+    * FULL probe ranking (rank 1 = best) whose prefix of length n is,
+    * by [[BoundedTopK]]'s total order (ord DESC, id ASC), exactly the
+    * probe set a knnJoin at nprobe=n would use. A candidate row in the
+    * cluster ranked pr participates in every level n ≥ pr, so
+    * per-level top-k is one explode + one row_number window under the
+    * SAME total order (score DESC, id ASC) the bounded top-k aggregate
+    * applies — making level n's top-k bit-identical to the knnJoin's.
+    * Hits are counted against `exactRef` (__tq, __tid), or when None
+    * against level maxLevel (the exhaustive reference — identical to
+    * the separate exact build the binary search uses), where
+    * hits(maxLevel) = nq·topK exactly: the reference intersected with
+    * itself. Returns n -> hits(n). */
+  private def hitsByLevel(index: IvfIndex, probesRanked: DataFrame,
+      q: DataFrame, embCol: String, idCol: String, topK: Int, maxLevel: Int,
+      exactRef: Option[DataFrame]): Map[Int, Long] = {
+    import org.apache.spark.sql.expressions.Window
+    val lev = scoreProbes(index, probesRanked, q, embCol, "__tune_qid", "__tune_qvec")
+      .select(col("__tune_qid"), col(idCol), col("__graft_score"), col("__graft_pr"))
+      .withColumn("__graft_n", explode(sequence(col("__graft_pr"), lit(maxLevel))))
+    val w = Window.partitionBy(col("__graft_n"), col("__tune_qid"))
+      .orderBy(col("__graft_score").desc, col(idCol).asc)
+    val top = lev.withColumn("__graft_rk", row_number().over(w))
+      .filter(col("__graft_rk") <= topK)
+      .select(col("__graft_n"), col("__tune_qid"), col(idCol))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val exact = exactRef.getOrElse(top.filter(col("__graft_n") === maxLevel)
+        .select(col("__tune_qid").as("__tq"), col(idCol).as("__tid")))
+      top.join(exact, top("__tune_qid") === col("__tq") &&
+          top(idCol) === col("__tid"))
+        .groupBy("__graft_n").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    } finally top.unpersist()
+  }
 
   /** Two-pass assignment of NEW rows under a FROZEN hierarchical
     * index — the exact assignment function the build used (coarse
     * argmax over k1 cells, then argmax over that cell's k2
     * sub-centers), at O((k1+k2)·d) per row. Appending to a hier index
-    * through the flat [[appendToIvf]] would be wrong twice over: the
+    * through the flat [[assignByCosine]] would be wrong twice over: the
     * flat argmax over all k is the O(k·d) non-starter at
     * SemDeDup-scale k, AND it is a DIFFERENT function from the
     * build's two-pass routing (a row near a cell boundary can flat-
@@ -1264,24 +1122,29 @@ object Ann {
       h: HierIvf): DataFrame = {
     val subCenters = Array.tabulate(h.k1)(c =>
       Array.tabulate(h.k2)(j => h.index.centers(c * h.k2 + j)))
-    val cellCol = "__graft_cell"
-    require(!newRows.columns.contains(cellCol),
-      s"assignByCosineHier: input collides with reserved column $cellCol")
+    require(!newRows.columns.contains(CellCol),
+      s"assignByCosineHier: input collides with reserved column $CellCol")
     newRows
-      .withColumn(cellCol, graft.functions.argmax_cosine(col(embCol), h.coarse))
+      .withColumn(CellCol, graft.functions.argmax_cosine(col(embCol), h.coarse))
       .withColumn("cluster",
-        graft.functions.argmax_cosine_cell(col(embCol), col(cellCol), subCenters))
-      .drop(cellCol)
+        graft.functions.argmax_cosine_cell(col(embCol), col(CellCol), subCenters))
+      .drop(CellCol)
   }
 
-  /** [[appendToIvf]] for hierarchical indexes: frozen-center two-pass
-    * assignment (see [[assignByCosineHier]]) + the same guarded
-    * partitioned append. */
-  def appendToIvfHier(h: HierIvf, newRows: DataFrame, embCol: String,
-      path: String): Unit =
-    appendAssigned(h.index, assignByCosineHier(newRows, embCol, h), path)
-
-  /** The shared guarded append: loud schema check — appending rows
+  /** Incremental index maintenance — the one append path (batch,
+    * stream and idempotent appends, flat or hierarchical): assign NEW
+    * rows with the index shape's own assignment under its FROZEN
+    * centers ([[IvfShape.assign]]) and append them to the persisted
+    * partitioned layout — the update path of build-once/search-many.
+    * Assignment with frozen centers is a pure function of the row (the
+    * same codegen'd argmax scan as the original build), so appended
+    * rows land in exactly the cluster a full rebuild with these
+    * centers would give them, and a reloaded index immediately serves
+    * old+new rows through the same directory-level pruning. Center
+    * drift is handled by periodic re-fit + rewrite, the standard IVF
+    * deployment cadence — appends never mutate existing files.
+    *
+    * Guarded by a loud schema check — appending rows
     * whose columns differ from the persisted layout (e.g. an index
     * carrying withSq8/withPq code columns the new rows lack) would
     * write a MIXED-schema directory that later reads resolve
@@ -1291,13 +1154,14 @@ object Ann {
     * float[] vs double[]) writes files later reads can only merge by
     * widening or failing — exactly the corruption this guard exists
     * to refuse. */
-  private def appendAssigned(index: IvfIndex, assigned: DataFrame,
+  def appendToIvf(ix: IvfShape, newRows: DataFrame, embCol: String,
       path: String): Unit = {
+    val assigned = ix.assign(newRows, embCol)
     def sig(df: DataFrame) =
       df.schema.fields.map(f => (f.name, f.dataType)).sortBy(_._1)
-    require(sig(assigned).sameElements(sig(index.assigned)),
+    require(sig(assigned).sameElements(sig(ix.index.assigned)),
       s"appendToIvf: appended schema ${sig(assigned).map { case (n, t) => s"$n:${t.simpleString}" }.mkString(",")} " +
-        s"!= index schema ${sig(index.assigned).map { case (n, t) => s"$n:${t.simpleString}" }.mkString(",")}; " +
+        s"!= index schema ${sig(ix.index.assigned).map { case (n, t) => s"$n:${t.simpleString}" }.mkString(",")}; " +
         "derive any code columns (sq8/pq) and match column types on the new rows before appending")
     // append/compaction protocol (see [[compactIvf]]): announce the
     // append with an inflight marker FIRST, then check the compaction
@@ -1324,8 +1188,8 @@ object Ann {
   }
 
   /** Streaming flavor of [[appendToIvf]]: a stream of new vectors
-    * assigned with the frozen centers and appended per micro-batch.
-    * Deliberately `foreachBatch` + batch append rather than the
+    * assigned with the frozen centers (flat or two-pass, per the index
+    * shape) and appended per micro-batch. Deliberately `foreachBatch` + batch append rather than the
     * streaming parquet sink: the streaming sink would plant a
     * `_spark_metadata` commit log in the index directory, after which
     * readers of the directory see ONLY the sink's files and the
@@ -1352,10 +1216,10 @@ object Ann {
     * a durable checkpoint and want retry-dedup across JVM restarts
     * pass the same token they pair with that checkpoint. Caller
     * starts the writer. */
-  def appendToIvfStream(index: IvfIndex, stream: DataFrame, embCol: String,
+  def appendToIvfStream(ix: IvfShape, stream: DataFrame, embCol: String,
       path: String, runToken: String = ""): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     idempotentForeachBatch(stream, path, runToken) { batch =>
-      appendToIvf(index, batch, embCol, path)
+      appendToIvf(ix, batch, embCol, path)
     }
 
   /** The opt-in token that makes [[onceBatch]] honor pre-runToken
@@ -1445,21 +1309,11 @@ object Ann {
     * (runToken, batchId) marker already exists. Returns true if the
     * batch was appended, false if it was recognized as an
     * already-applied retry. */
-  def appendBatchIdempotent(index: IvfIndex, batch: DataFrame,
+  def appendBatchIdempotent(ix: IvfShape, batch: DataFrame,
       embCol: String, path: String, batchId: Long,
       runToken: String = "run-0"): Boolean =
     onceBatch(batch.sparkSession, path, batchId, runToken) {
-      appendToIvf(index, batch, embCol, path)
-    }
-
-  /** [[appendToIvfStream]] for hierarchical indexes: the same
-    * run-scoped idempotent micro-batch appends, routed through the
-    * build's two-pass assignment ([[assignByCosineHier]]) instead of
-    * the flat O(k·d) argmax. */
-  def appendToIvfHierStream(h: HierIvf, stream: DataFrame, embCol: String,
-      path: String, runToken: String = ""): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    idempotentForeachBatch(stream, path, runToken) { batch =>
-      appendToIvfHier(h, batch, embCol, path)
+      appendToIvf(ix, batch, embCol, path)
     }
 
   /** Compact an appended index layout. Every [[appendToIvf]] adds at
@@ -1691,8 +1545,8 @@ object Ann {
   /** Persist a hierarchical index: the flat artifact ([[persistIvf]] —
     * assignment `partitionBy(cluster)` + flat centers) plus the coarse
     * centers and level shape as tiny sidecars, so a reloaded index
-    * supports the two-level probes ([[searchIvfHier]] and the
-    * compressed variants) exactly like the in-memory build. The fit
+    * supports the two-level probes ([[searchIvfHier]] with any
+    * [[Codes]], [[knnJoinIvfHier]]) exactly like the in-memory build. The fit
     * diagnostics (sampleTarget, measured Lloyd cost) persist too —
     * they are provenance a 100-TB deployment wants auditable. */
   def persistIvfHier(h: HierIvf, path: String): Unit = {

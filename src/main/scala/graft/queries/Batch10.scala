@@ -53,16 +53,16 @@ object Batch10 {
 
   /** Fit-sample size for [[semanticK]]'s k: ~20 sample points per
     * centroid, floored at the default 100k and capped at 2M rows so
-    * the MLlib fit stays bounded; past the cap the fit sees fewer
-    * points per centroid and degrades gracefully (centroid quality,
-    * not correctness — assignment still covers every row). */
+    * the driver-local Lloyd fit stays bounded; past the cap the fit
+    * sees fewer points per centroid and degrades gracefully (centroid
+    * quality, not correctness — assignment still covers every row). */
   private[graft] def semanticFitRows(k: Int): Int =
     math.max(100000, math.min(2000000, 20 * k))
 
   /** Memoized SemDeDup result per (session, dir) — the k-means fit +
     * within-cluster pair scan run once; later invocations read the
     * cached keep-set (bench marks the entry `amortized`).
-    * buildIvfAuto picks the fit: flat MLlib at catalog-fixture k,
+    * buildIvfAuto picks the fit: the flat fit at catalog-fixture k,
     * the two-level hierarchical fit once k outgrows a single Lloyd
     * problem (above ~4k centroids) — so the un-capped [[semanticK]]
     * is fittable all the way to its 2^20 ceiling. */
@@ -86,9 +86,9 @@ object Batch10 {
   /** SemDeDup through the FORCED two-level fit: `hierThreshold = 8`
     * sits below the fixture's k (semanticK floors at 16), so
     * [[graft.ops.Ann.buildIvfAuto]] takes the hierarchical branch —
-    * the oracle gate then executes the same coarse-MLlib +
+    * the oracle gate then executes the same coarse-fit +
     * per-cell-Lloyd + two-pass-assignment machinery a SemDeDup-scale
-    * (k ≈ 2^20) deployment runs, not just the flat MLlib fit the
+    * (k ≈ 2^20) deployment runs, not just the flat fit the
     * fixture k would otherwise pick. Drop-rule invariants for the
     * hier-fit path are asserted in AnnSpec (copies collapse, no kept
     * same-cluster pair >= tau, deterministic). */

@@ -406,9 +406,9 @@ object Batch3 {
     * sidecars, reloaded through [[graft.ops.Ann.loadIvfHier]]).
     * k=16 keeps the fixture build tiny (k1=4 coarse cells × k2=4
     * sub-centers) while executing the REAL two-level machinery end to
-    * end: coarse MLlib fit, per-cell executor-side Lloyd in mapGroups,
-    * `argmax_cosine_cell` two-pass assignment — the same code path a
-    * 2^20-centroid SemDeDup-scale build takes. */
+    * end: coarse driver-local fit, per-cell executor-side Lloyd in
+    * mapGroups, `argmax_cosine_cell` two-pass assignment — the same
+    * code path a 2^20-centroid SemDeDup-scale build takes. */
   private val hierMemo = new SessionMemo[graft.ops.Ann.HierIvf]((s, dir) => {
     val h = graft.ops.Ann.buildIvfHierarchical(
       table(s, dir, "embeddings"), "embedding", k = 16)

@@ -390,9 +390,9 @@ object Batch9 {
           .select(col("embedding")).head().getSeq[Float](0).toArray
         // rescore >= |table| (footer-metadata count, not a scan)
         val n = table(s, dir, "embeddings").count().toInt
-        graft.ops.Ann.searchIvfSq8(idx, "embedding", q,
-            topK = 20, nprobe = idx.centers.length, rescore = n,
-            tieBreak = Seq(col("vec_id")))
+        graft.ops.Ann.searchIvf(idx, "embedding", q,
+            topK = 20, nprobe = idx.centers.length,
+            tieBreak = Seq(col("vec_id")), codes = graft.ops.Ann.Sq8(rescore = n))
           .select(col("vec_id"), col("score"))
           .orderBy(col("score").desc, col("vec_id"))
       },
@@ -404,7 +404,7 @@ object Batch9 {
       "IVF-SQ8: int8 codes in the index, integer first-stage scoring, exact float rescore (exhaustive probe+rescore = exact; pruned path AnnSpec-verified)"),
 
     // ---- the TWO-LEVEL hierarchical IVF on the oracle gate: build
-    // with buildIvfHierarchical (coarse MLlib fit + per-cell
+    // with buildIvfHierarchical (coarse driver-local fit + per-cell
     // executor-side Lloyd + argmax_cosine_cell two-pass assignment),
     // probe with searchIvfHier at exhaustive nprobeCoarse=k1 and
     // nprobe=k1·k2 — every cell's every sub-cluster is scanned, so the
@@ -445,9 +445,9 @@ object Batch9 {
         val q = table(s, dir, "embeddings").filter(col("vec_id") === 0)
           .select(col("embedding")).head().getSeq[Float](0).toArray
         val n = table(s, dir, "embeddings").count().toInt
-        graft.ops.Ann.searchIvfPq(idx, "embedding", q, cb,
-            topK = 20, nprobe = idx.centers.length, rescore = n,
-            tieBreak = Seq(col("vec_id")))
+        graft.ops.Ann.searchIvf(idx, "embedding", q,
+            topK = 20, nprobe = idx.centers.length,
+            tieBreak = Seq(col("vec_id")), codes = graft.ops.Ann.Pq(cb, rescore = n))
           .select(col("vec_id"), col("score"))
           .orderBy(col("score").desc, col("vec_id"))
       },

@@ -74,19 +74,21 @@ class AnnRecallSpec extends SparkTestBase {
 
     assert(meanRecall("searchIvf")(q =>
       Ann.searchIvf(idx, "embedding", q, TOPK, NPROBE)) >= FLOOR)
-    assert(meanRecall("searchIvfSq8")(q =>
-      Ann.searchIvfSq8(sq8, "embedding", q, TOPK, NPROBE, RESCORE)) >= FLOOR)
-    assert(meanRecall("searchIvfPq")(q =>
-      Ann.searchIvfPq(pq, "embedding", q, cb, TOPK, NPROBE, RESCORE)) >= FLOOR)
+    assert(meanRecall("searchIvf Sq8")(q =>
+      Ann.searchIvf(sq8, "embedding", q, TOPK, NPROBE,
+        codes = Ann.Sq8(RESCORE))) >= FLOOR)
+    assert(meanRecall("searchIvf Pq")(q =>
+      Ann.searchIvf(pq, "embedding", q, TOPK, NPROBE,
+        codes = Ann.Pq(cb, RESCORE))) >= FLOOR)
     assert(meanRecall("searchIvfHier")(q =>
       Ann.searchIvfHier(h, "embedding", q, TOPK,
         nprobeCoarse = h.k1, nprobe = NPROBE)) >= FLOOR)
-    assert(meanRecall("searchIvfHierSq8")(q =>
-      Ann.searchIvfHierSq8(hSq8, "embedding", q, TOPK,
-        nprobeCoarse = h.k1, nprobe = NPROBE, rescore = RESCORE)) >= FLOOR)
-    assert(meanRecall("searchIvfHierPq")(q =>
-      Ann.searchIvfHierPq(hPq, "embedding", q, cb, TOPK,
-        nprobeCoarse = h.k1, nprobe = NPROBE, rescore = RESCORE)) >= FLOOR)
+    assert(meanRecall("searchIvfHier Sq8")(q =>
+      Ann.searchIvfHier(hSq8, "embedding", q, TOPK,
+        nprobeCoarse = h.k1, nprobe = NPROBE, codes = Ann.Sq8(RESCORE))) >= FLOOR)
+    assert(meanRecall("searchIvfHier Pq")(q =>
+      Ann.searchIvfHier(hPq, "embedding", q, TOPK,
+        nprobeCoarse = h.k1, nprobe = NPROBE, codes = Ann.Pq(cb, RESCORE))) >= FLOOR)
   }
 
   test("recall@20 >= 0.90 at production nprobe, all six search paths, sf0.01") {

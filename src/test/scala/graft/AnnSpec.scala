@@ -212,7 +212,7 @@ class AnnSpec extends SparkTestBase {
       "embedding", k = 16)
     val path = java.nio.file.Files.createTempDirectory("ivfhierappend").toString
     Ann.persistIvfHier(h, path)
-    Ann.appendToIvfHier(h, base.filter($"vec_id" % 2 === 1), "embedding", path)
+    Ann.appendToIvf(h, base.filter($"vec_id" % 2 === 1), "embedding", path)
     val loaded = Ann.loadIvfHier(spark, path)
     val got = loaded.index.assigned.select("vec_id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
@@ -438,8 +438,8 @@ class AnnSpec extends SparkTestBase {
     val index = Ann.withSq8(Ann.buildIvf(emb, "embedding", k = 8), "embedding")
     // rescore > |table| → the integer first stage keeps everything and
     // the float re-rank decides alone: result must equal searchIvf
-    val a = Ann.searchIvfSq8(index, "embedding", query, topK = 10,
-        nprobe = 3, rescore = 1000, tieBreak = Seq(col("vec_id")))
+    val a = Ann.searchIvf(index, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Sq8(rescore = 1000))
       .select("vec_id", "score").collect().map(_.toString).toSeq
     val b = Ann.searchIvf(index, "embedding", query, topK = 10,
         nprobe = 3, tieBreak = Seq(col("vec_id")))
@@ -450,8 +450,8 @@ class AnnSpec extends SparkTestBase {
   test("IVF-SQ8 pruned rescore recalls the float top-k") {
     import org.apache.spark.sql.functions.col
     val index = Ann.withSq8(Ann.buildIvf(emb, "embedding", k = 8), "embedding")
-    val viaSq8 = Ann.searchIvfSq8(index, "embedding", query, topK = 10,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val viaSq8 = Ann.searchIvf(index, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Sq8(rescore = 50))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     val viaFloat = Ann.searchIvf(index, "embedding", query, topK = 10,
         nprobe = 3, tieBreak = Seq(col("vec_id")))
@@ -468,8 +468,8 @@ class AnnSpec extends SparkTestBase {
     val base = Ann.buildIvf(emb, "embedding", k = 8)
     val cb = Ann.fitPq(emb, "embedding", m = 8)
     val index = Ann.withPq(base, "embedding", cb)
-    val a = Ann.searchIvfPq(index, "embedding", query, cb, topK = 10,
-        nprobe = 3, rescore = 1000, tieBreak = Seq(col("vec_id")))
+    val a = Ann.searchIvf(index, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 1000))
       .select("vec_id", "score").collect().map(_.toString).toSeq
     val b = Ann.searchIvf(index, "embedding", query, topK = 10,
         nprobe = 3, tieBreak = Seq(col("vec_id")))
@@ -482,8 +482,8 @@ class AnnSpec extends SparkTestBase {
     val base = Ann.buildIvf(emb, "embedding", k = 8)
     val cb = Ann.fitPq(emb, "embedding", m = 8)
     val index = Ann.withPq(base, "embedding", cb)
-    val viaPq = Ann.searchIvfPq(index, "embedding", query, cb, topK = 10,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val viaPq = Ann.searchIvf(index, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 50))
       .collect().map(_.getAs[Long]("vec_id")).toSeq
     val viaFloat = Ann.searchIvf(index, "embedding", query, topK = 10,
         nprobe = 3, tieBreak = Seq(col("vec_id")))
@@ -509,11 +509,11 @@ class AnnSpec extends SparkTestBase {
     assert(loadedCb.m === cb.m)
     assert(loadedCb.centers.map(_.map(_.toSeq).toSeq).toSeq
       === cb.centers.map(_.map(_.toSeq).toSeq).toSeq)
-    val a = Ann.searchIvfPq(index, "embedding", query, cb, topK = 5,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val a = Ann.searchIvf(index, "embedding", query, topK = 5,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val b = Ann.searchIvfPq(loadedIdx, "embedding", query, loadedCb, topK = 5,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val b = Ann.searchIvf(loadedIdx, "embedding", query, topK = 5,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(loadedCb, rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(a === b)
   }
@@ -526,11 +526,11 @@ class AnnSpec extends SparkTestBase {
     val loaded = Ann.loadIvf(spark, path)
     assert(loaded.assigned.columns.contains("qvec")
       && loaded.assigned.columns.contains("qnorm"))
-    val a = Ann.searchIvfSq8(index, "embedding", query, topK = 5,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val a = Ann.searchIvf(index, "embedding", query, topK = 5,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Sq8(rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
-    val b = Ann.searchIvfSq8(loaded, "embedding", query, topK = 5,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id")))
+    val b = Ann.searchIvf(loaded, "embedding", query, topK = 5,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Sq8(rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(a === b)
   }
@@ -583,10 +583,10 @@ class AnnSpec extends SparkTestBase {
     val cb = Ann.fitPq(emb, "embedding", m = 8)
     val pq = Ann.withPq(Ann.buildIvf(emb, "embedding", k = 8), "embedding", cb)
     val searches = Seq(
-      "sq8" -> Ann.searchIvfSq8(sq8, "embedding", query, topK = 10,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id"))),
-      "pq" -> Ann.searchIvfPq(pq, "embedding", query, cb, topK = 10,
-        nprobe = 3, rescore = 50, tieBreak = Seq(col("vec_id"))))
+      "sq8" -> Ann.searchIvf(sq8, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Sq8(rescore = 50)),
+      "pq" -> Ann.searchIvf(pq, "embedding", query, topK = 10,
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 50)))
     for ((name, df) <- searches) {
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
@@ -830,20 +830,20 @@ class AnnSpec extends SparkTestBase {
     val base = emb.select($"vec_id", $"embedding")
     val h = Ann.buildIvfHierarchical(base, "embedding", k = 64)
     // cluster ids are cell·k2+j, addressable in the flat center table,
-    // so searchIvfSq8's rankClusters works on the hierarchical output
+    // so the flat probe ranking works on the hierarchical output
     // unchanged
     val coded = Ann.withSq8(h.index, "embedding")
     val tie = Seq(col("vec_id"))
     val exact = Ann.bruteForce(base, "embedding", query, 10, tie)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val n = base.count().toInt
-    val got = Ann.searchIvfSq8(coded, "embedding", query, 10,
-        nprobe = coded.centers.length, rescore = n, tieBreak = tie)
+    val got = Ann.searchIvf(coded, "embedding", query, 10,
+        nprobe = coded.centers.length, tieBreak = tie, codes = Ann.Sq8(rescore = n))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got === exact)
-    val pruned = Ann.searchIvfSq8(coded, "embedding", query, 10,
-        nprobe = math.max(1, coded.centers.length / 2), rescore = 20,
-        tieBreak = tie)
+    val pruned = Ann.searchIvf(coded, "embedding", query, 10,
+        nprobe = math.max(1, coded.centers.length / 2), tieBreak = tie,
+        codes = Ann.Sq8(rescore = 20))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(pruned.intersect(exact.toSet).size >= 3,
       s"recall too low: ${pruned.intersect(exact.toSet).size}/10")
@@ -853,13 +853,14 @@ class AnnSpec extends SparkTestBase {
     // cannot do): exhaustive probes + rescore stay exact through the
     // hierarchical path too
     val hCoded = h.copy(index = coded)
-    val hierExhaustive = Ann.searchIvfHierSq8(hCoded, "embedding", query, 10,
-        nprobeCoarse = h.k1, nprobe = h.k1 * h.k2, rescore = n, tieBreak = tie)
+    val hierExhaustive = Ann.searchIvfHier(hCoded, "embedding", query, 10,
+        nprobeCoarse = h.k1, nprobe = h.k1 * h.k2, tieBreak = tie,
+        codes = Ann.Sq8(rescore = n))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(hierExhaustive === exact)
-    val hierPruned = Ann.searchIvfHierSq8(hCoded, "embedding", query, 10,
+    val hierPruned = Ann.searchIvfHier(hCoded, "embedding", query, 10,
         nprobeCoarse = math.max(2, h.k1 / 2), nprobe = h.k1 * h.k2 / 2,
-        rescore = 20, tieBreak = tie)
+        tieBreak = tie, codes = Ann.Sq8(rescore = 20))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(hierPruned.intersect(exact.toSet).size >= 3)
     assert(hierPruned.contains(7L))
@@ -875,8 +876,9 @@ class AnnSpec extends SparkTestBase {
     val exact = Ann.bruteForce(base, "embedding", query, 10, tie)
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val n = base.count().toInt
-    val got = Ann.searchIvfHierPq(hCoded, "embedding", query, cb, 10,
-        nprobeCoarse = h.k1, nprobe = h.k1 * h.k2, rescore = n, tieBreak = tie)
+    val got = Ann.searchIvfHier(hCoded, "embedding", query, 10,
+        nprobeCoarse = h.k1, nprobe = h.k1 * h.k2, tieBreak = tie,
+        codes = Ann.Pq(cb, rescore = n))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(got === exact)
   }
@@ -951,5 +953,57 @@ class AnnSpec extends SparkTestBase {
       "embedding", "vec_id", tau)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(again === keptIds)
+  }
+
+  test("driver probe list equals the batched ranking at nprobe = k, flat and hier") {
+    // both forms rank by the same clamped cosine under the same total
+    // order (cosine DESC, cluster ASC); the centers themselves are in
+    // the panel, where an unclamped self-cosine can exceed 1.0
+    val base = emb.select($"vec_id", $"embedding")
+    val idx = Ann.buildIvf(base, "embedding", k = 16)
+    val h = Ann.buildIvfHierarchical(base, "embedding", k = 16)
+    val rows = emb.filter($"vec_id" < 20).select("embedding").collect()
+      .map(_.getSeq[Float](0).toArray)
+    val panel = (rows ++ idx.centers ++ h.coarse ++ h.index.centers).zipWithIndex
+    val q = panel.toSeq.map { case (v, i) => (i.toLong, v.toSeq) }.toDF("qid", "qvec")
+    for ((name, r, k) <- Seq(
+        ("flat", Ann.Flat(idx), idx.centers.length),
+        ("hier", Ann.TwoLevel(h, h.k1), h.index.centers.length))) {
+      val batched = Ann.probesRanked(r, q, "qid", "qvec", k).collect()
+        .groupBy(_.getLong(0))
+        .map { case (qid, rs) => qid -> rs.sortBy(_.getInt(2)).map(_.getLong(1).toInt).toSeq }
+      panel.foreach { case (v, i) =>
+        assert(Ann.probeList(r, v, k).toSeq === batched(i.toLong), s"$name query $i")
+      }
+    }
+  }
+
+  test("buildIvfHierarchical refuses the reserved column before any Spark job") {
+    val colliding = emb.withColumn("__graft_cell", org.apache.spark.sql.functions.lit(0))
+    colliding.columns
+    val jobs = jobsDuring {
+      val e = intercept[IllegalArgumentException](
+        Ann.buildIvfHierarchical(colliding, "embedding", k = 16))
+      assert(e.getMessage.contains("__graft_cell"))
+    }
+    assert(jobs === 0)
+  }
+
+  test("concurrent fits on the shared Lloyd pool: centers bit-identical to a sequential fit") {
+    // 5000 seeded vectors: five 1024-point chunks per Lloyd iteration,
+    // so the four fits interleave on the pool (the sf fixtures hold at
+    // most 2000 embeddings)
+    val rnd = new scala.util.Random(7)
+    val big = (0 until 5000)
+      .map(i => (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    def bits(i: Ann.IvfIndex) = i.centers.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+    val want = bits(Ann.buildIvf(big, "embedding", k = 16))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val got = (1 to 4).map(_ => pool.submit(() => bits(Ann.buildIvf(big, "embedding", k = 16))))
+        .map(_.get(10, java.util.concurrent.TimeUnit.MINUTES))
+      got.foreach(g => assert(g === want))
+    } finally pool.shutdown()
   }
 }

@@ -11,30 +11,6 @@ class KvSpec extends SparkTestBase {
   private def kvMap(df: org.apache.spark.sql.DataFrame): Map[String, String] =
     df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
 
-  /** Spark jobs started while `body` runs. A fence job tagged by a local
-    * property marks the end: listener events arrive in order, so once
-    * the fence's start is seen every earlier job start has been counted. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("kvspec.fence") != null))
-          fenceSeen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("kvspec.fence", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("kvspec.fence", null)
-      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.get
-  }
-
   private def joins(df: org.apache.spark.sql.DataFrame): Int =
     df.queryExecution.logical.collect {
       case j: org.apache.spark.sql.catalyst.plans.logical.Join => j

@@ -13,4 +13,28 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/$name"
+
+  /** Spark jobs started while `body` runs. A fence job tagged by a local
+    * property marks the end: listener events arrive in order, so once
+    * the fence's start is seen every earlier job start has been counted. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val fenceSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.fence") != null))
+          fenceSeen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty("graft.test.fence", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.test.fence", null)
+      assert(fenceSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
 }

@@ -209,7 +209,7 @@ class StreamingSpec extends SparkTestBase {
     emb.filter($"vec_id" >= 500).write.mode("overwrite").parquet(feed)
     val stream = spark.readStream
       .schema(spark.read.parquet(feed).schema).parquet(feed)
-    val q = graft.ops.Ann.appendToIvfHierStream(h, stream, "embedding", path)
+    val q = graft.ops.Ann.appendToIvfStream(h, stream, "embedding", path)
       .option("checkpointLocation", tmp())
       .start()
     q.processAllAvailable(); q.stop()
