@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.{Artifact, MemoTrack}
+
 /** Benchmark main: runs every catalog query against
   * SPARK_GRAFT_SF_DIR, one warmup pass (JIT + codegen + file-listing
   * caches) then GRAFT_BENCH_PASSES timed passes (default 2),
@@ -165,12 +167,12 @@ object Bench {
       }
     }
 
-    /** Run one catalog query under [[graft.queries.MemoTrack]]
+    /** Run one catalog query under [[MemoTrack]]
       * attribution (its memo reads feed the derived `amortized` and
       * `fit_deps` fields). */
     def runCapped(name: String, phase: String): Option[Double] =
       timeCapped(name, phase) {
-        graft.queries.MemoTrack.within(name) {
+        MemoTrack.within(name) {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
         }
@@ -203,15 +205,16 @@ object Bench {
     var cut = false
     val warm = collection.mutable.LinkedHashMap.empty[String, Double]
     val timed = collection.mutable.LinkedHashMap.empty[String, Double]
-    // Phase 0: FIT. Every shared fitted artifact (pair graph, CC
-    // fixpoint, ANN indexes, SemDeDup, keep-bloom, BPE model) is built
-    // HERE, each timed as its own `fit_<memo label>` bench line —
-    // the fit cost is reported once, explicitly, instead of being
-    // absorbed by whichever consumer entry happens to run first
-    // (r12/r13 verdict task: the hooks existed, nothing timed them).
-    // Runs BEFORE warmup so no catalog entry's warmup ever pays a
-    // build; thunks are declared in dependency order inside each
-    // batch, so each line measures only its own increment. These are
+    // Phase 0: FIT. Every declared [[Artifact]] (pair graph, CC
+    // fixpoint, ANN indexes, SemDeDup, keep-bloom, BPE model, LSH
+    // calibration) is built HERE, each timed as its own `fitLine`
+    // bench line — the fit cost is reported once, explicitly, instead
+    // of being absorbed by whichever consumer entry happens to run
+    // first (r12/r13 verdict task: the hooks existed, nothing timed
+    // them). Runs BEFORE warmup so no catalog entry's warmup ever pays
+    // a build; the registry is in dependency order (loading the
+    // catalog above registered every artifact), so each line measures
+    // only its own increment under the artifact's own scope. These are
     // one-shot COLD measurements by construction (a rerun would read
     // the memo and time ~0), so a steal burst here shows as a >2x-
     // floor fit line — adjudicate against BASELINE like any entry.
@@ -228,15 +231,14 @@ object Bench {
     val fits = collection.mutable.LinkedHashMap.empty[String, Double]
     // fit-rescue adjudication (r14 verdict: fit_* lines were one-shot
     // cold measurements with no rescue path, so a steal burst landing
-    // on one — fit_append_idx at 3.1x floor — was unadjudicable from a
-    // single run). A fit line exceeding 2x its BASELINE floor (and
-    // 1 s absolute; the gate was 3x until r20 — the grading rubric
+    // on one — the append-index fit at 3.1x floor — was unadjudicable
+    // from a single run). A fit line exceeding 2x its BASELINE floor
+    // (and 1 s absolute; the gate was 3x until r20 — the grading rubric
     // counts every >2x line, so a 2.9x fit carried no evidence) gets
-    // ONE retry, made MEMO-cold by evicting the
-    // memo behind it (SessionMemo.evictFit; a plain rerun would read
-    // the memo and time ~0). Memo-cold only: persisted artifacts
-    // (persist-once skips the rewrite), OS page cache, and JIT state
-    // stay warm, so the min below can understate a truly cold fit —
+    // ONE retry, made MEMO-cold by evicting the artifact (a plain rerun
+    // would read the memo and time ~0). Memo-cold only: persisted
+    // artifacts (persist-once skips the rewrite), OS page cache, and JIT
+    // state stay warm, so the min below can understate a truly cold fit —
     // floor adjudication should read it as "uncontended rebuild", not
     // "first-ever build" (ADVICE r15). Both measurements land in the
     // full JSON line as `fit_retry` so a still->2x line carries its
@@ -246,58 +248,20 @@ object Bench {
     if (only.isEmpty) {
       if (SparkEntry.queries.contains("t1_map_project"))
         runCapped("t1_map_project", "jvm-prewarm")
-      val allFitThunks: Seq[(String, () => Unit)] =
-        graft.queries.Batch3.fitThunks(spark, sfDir) ++
-        graft.queries.Batch4.fitThunks(spark, sfDir) ++
-        graft.queries.Batch9.fitThunks(spark, sfDir) ++
-        graft.queries.Batch10.fitThunks(spark, sfDir) ++
-        graft.queries.Batch12.fitThunks(spark, sfDir) ++
-        graft.queries.Batch13.fitThunks(spark, sfDir)
-      // Bounded-sample fits: their Spark jobs operate on ≤maxFitRows
-      // samples / driver-held artifacts BY CONSTRUCTION at any corpus
-      // scale, so 32 shuffle partitions on their sub-second jobs is
-      // pure scheduling overhead (r21 verdict: the whole fit family ran
-      // FASTER at local[8]); scope them to GRAFT_FIT_SHUFFLE_PARTITIONS
-      // (default min(8, cpus); 0 disables the scoping — a deployment
-      // whose fit-adjacent jobs are corpus-sized, e.g. a SemDeDup
-      // assignment pass over 10^9 vectors, sets it to cluster width).
-      // The corpus-scale fit lines (pair mining, CC fixpoint, LSH
-      // banding) are deliberately NOT in the set: their joins are the
-      // measured full-corpus operation and keep the session width.
-      val boundedSampleFits = Set(
-        "fit_ivf_index", "fit_sq8_index", "fit_hier_index", "fit_pq_index",
-        "fit_append_idx", "fit_compact_idx", "fit_semantic_dedup",
-        "fit_semantic_dedup_hier", "fit_bpe_model", "fit_keep_bloom")
-      val fitParts = sys.env.getOrElse("GRAFT_FIT_SHUFFLE_PARTITIONS",
-        math.min(8, cpus.toInt).toString).toInt
-      def scopedFit(fname: String)(body: => Unit): Unit =
-        if (fitParts > 0 && boundedSampleFits(fname)) {
-          val key = "spark.sql.shuffle.partitions"
-          val prev = spark.conf.get(key)
-          spark.conf.set(key, fitParts.toString)
-          try body finally spark.conf.set(key, prev)
-        } else body
-      for ((fname, thunk) <- allFitThunks) {
-        // snake_case is load-bearing: every floor parser in the
-        // pipeline matches table rows with [a-z0-9_]+ — a camelCase
-        // fit line would silently fall out of every floor table
-        require(fname.matches("fit_[a-z0-9_]+"),
-          s"fit thunk name '$fname' must be fit_<snake_case>")
+      for (a <- Artifact.all; fname = a.fitLine) {
         if (elapsed >= measureDeadline) cut = true
         else {
-          timeCapped(fname, "fit")(scopedFit(fname)(thunk())).foreach(fits(fname) = _)
+          timeCapped(fname, "fit")(a.fit(spark, sfDir)).foreach(fits(fname) = _)
           for (first <- fits.get(fname); floor <- baselineSec.get(fname)
                if first > 2 * floor && first > 1.0 &&
                  elapsed < measureDeadline) {
-            if (graft.queries.SessionMemo.evictFit(fname)) {
-              System.err.println(
-                f"[bench][fit-retry] $fname $first%.2f s vs floor $floor%.2f s — cold retry")
-              timeCapped(fname, "fit-retry")(scopedFit(fname)(thunk())).foreach { second =>
-                fitRetry(fname) = (first, second)
-                fits(fname) = math.min(first, second)
-              }
-            } else System.err.println(
-              s"[bench][fit-retry] $fname has no eviction hook — cannot re-fit cold")
+            System.err.println(
+              f"[bench][fit-retry] $fname $first%.2f s vs floor $floor%.2f s — cold retry")
+            a.evict()
+            timeCapped(fname, "fit-retry")(a.fit(spark, sfDir)).foreach { second =>
+              fitRetry(fname) = (first, second)
+              fits(fname) = math.min(first, second)
+            }
           }
         }
       }
@@ -312,11 +276,10 @@ object Bench {
       if (elapsed >= measureDeadline) cut = true
       else runCapped(name, "warmup").foreach(warm(name) = _)
     }
-    // Phase 1.5: memo pre-touch. Every shared SessionMemo artifact
-    // (pair counts, CC fixpoint, IVF/SQ8/hier/PQ indexes, SemDeDup,
-    // keep-bloom) is forced warm HERE, outside any timed window —
-    // warmup already built them, so this is normally a sub-second
-    // cached-block sweep, but if an entry somehow went cold the
+    // Phase 1.5: memo pre-touch. Every declared artifact is forced
+    // warm HERE (`fit`: build if cold, materialize), outside any timed
+    // window — warmup already built them, so this is normally a
+    // sub-second cached-block sweep, but if an entry somehow went cold the
     // rebuild lands in this phase (and logs its reason) instead of
     // poisoning a timed pass: the round-10 verdict's `amortized`
     // artifact (ann_ivf_sq8 4.1x floor, dedup_clusters 20.9x) was
@@ -328,7 +291,7 @@ object Bench {
     // every query: the builds run on a watchdogged thread with a
     // job-group cancel, so one pathological cold rebuild cannot eat
     // the measuring window.
-    def touchMemos(phase: String): Unit =
+    def pretouch(phase: String): Unit =
       if (only.isEmpty && elapsed < deadlineSec) {
         val m0 = System.nanoTime()
         // a third of the remaining window at most: a cold rebuild here
@@ -339,12 +302,7 @@ object Bench {
         val worker = new Thread(() => {
           try {
             sc.setJobGroup(group, "memo pre-touch", interruptOnCancel = true)
-            graft.queries.Batch3.touchMemos(spark, sfDir)
-            graft.queries.Batch4.touchMemos(spark, sfDir)
-            graft.queries.Batch9.touchMemos(spark, sfDir)
-            graft.queries.Batch10.touchMemos(spark, sfDir)
-            graft.queries.Batch12.touchMemos(spark, sfDir)
-            graft.queries.Batch13.touchMemos(spark, sfDir)
+            Artifact.all.foreach(_.fit(spark, sfDir))
             System.err.println(
               f"[bench] $phase memo pre-touch ${(System.nanoTime() - m0) / 1e9}%.2f s (t=$elapsed%.0f s)")
           } catch {
@@ -363,7 +321,7 @@ object Bench {
           worker.join(30000)
         }
       }
-    touchMemos("pre-timed")
+    pretouch("pre-timed")
     // Phase 2: timed passes against a settled JVM, min per query,
     // stopping once the measuring window closes.
     for (i <- 1 to passes;
@@ -402,7 +360,7 @@ object Bench {
     val rescued = collection.mutable.LinkedHashMap.empty[String, List[Double]]
     def recordAttempt(name: String, before: Double, attempt: Double): Unit =
       rescued(name) = rescued.getOrElse(name, List(before)) :+ attempt
-    touchMemos("pre-rescue")
+    pretouch("pre-rescue")
     for (name <- names) {
       (warm.get(name), timed.get(name)) match {
         case (Some(w), Some(t)) if t > 5 * w && t > 2.0 && elapsed < deadlineSec =>
@@ -485,15 +443,14 @@ object Bench {
     // stale twice): an entry is `amortized` iff it actually read a
     // shared fitted artifact this run, and its `fit_deps` name the
     // exact fit_* lines whose cost its warm time excludes.
-    val amortized = names.filter(n =>
-      graft.queries.MemoTrack.readsOf(n).nonEmpty)
+    val amortized = names.filter(n => MemoTrack.readsOf(n).nonEmpty)
     // only name fit lines this run actually EMITTED: under
     // GRAFT_BENCH_ONLY the fit phase is skipped, and a capped/
-    // deadline-cut thunk has no line — a dangling fit_* reference
+    // deadline-cut fit has no line — a dangling fit_* reference
     // would point floor parsers at a row that doesn't exist
     val fitDeps = amortized.map(n =>
-      n -> graft.queries.MemoTrack.readsOf(n).map(
-        graft.queries.MemoTrack.fitName).filter(fits.contains))
+      n -> MemoTrack.readsOf(n).flatMap(Artifact.named).map(_.fitLine)
+        .filter(fits.contains))
       .filter(_._2.nonEmpty)
     val fitDepsJson = fitDeps.map { case (n, ds) =>
       "\"" + n + "\":" + strArr(ds) }.mkString("{", ",", "}")
@@ -522,7 +479,7 @@ object Bench {
     // and then an 8-core scaling bench in the same workspace, and with
     // one shared default the second run overwrote the first's
     // fit_retry/rescued adjudication evidence — the r21 32-core fit
-    // outliers (fit_bpe_model 10.3x floor) became unadjudicable. The
+    // outliers (the BPE fit at 10.3x floor) became unadjudicable. The
     // stdout line's `full` pointer resolves to whichever path was used.
     val benchOutPath =
       sys.env.getOrElse("GRAFT_BENCH_OUT", s"bench_out_c$cpus.json")

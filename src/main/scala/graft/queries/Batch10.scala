@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.functions.fnv64
 import graft.queries.Catalog.{Q, events, table}
+import graft.queries.Artifact.SampleBounded
 
 /** Query batch 10: training-corpus assembly operators — deterministic
   * data mixing, sequence packing, token-budget selection — plus the
@@ -66,7 +67,7 @@ object Batch10 {
     * the two-level hierarchical fit once k outgrows a single Lloyd
     * problem (above ~4k centroids) — so the un-capped [[semanticK]]
     * is fittable all the way to its 2^20 ceiling. */
-  private val semanticMemo = new SessionMemo[DataFrame]((s, dir) => {
+  private val semanticDedup = Artifact("semantic_dedup", SampleBounded)((s, dir) => {
     val emb = plantedEmbeddings(s, dir)
     val n = emb.count()
     val k = semanticK(n)
@@ -81,7 +82,7 @@ object Batch10 {
     graft.ops.Ann.semanticDedup(idx, "embedding", "vec_id", tau = 0.9)
       .select(col("vec_id"), col("cluster"))
       .transform(Reuse.cacheFresh("batch10.semanticDedup", _))
-  }, "semanticDedup")
+  })(_.count())
 
   /** SemDeDup through the FORCED two-level fit: `hierThreshold = 8`
     * sits below the fixture's k (semanticK floors at 16), so
@@ -92,7 +93,8 @@ object Batch10 {
     * fixture k would otherwise pick. Drop-rule invariants for the
     * hier-fit path are asserted in AnnSpec (copies collapse, no kept
     * same-cluster pair >= tau, deterministic). */
-  private val semanticHierMemo = new SessionMemo[DataFrame]((s, dir) => {
+  private val semanticDedupHier =
+    Artifact("semantic_dedup_hier", SampleBounded)((s, dir) => {
     val emb = plantedEmbeddings(s, dir)
     val n = emb.count()
     val k = semanticK(n)
@@ -109,7 +111,7 @@ object Batch10 {
     graft.ops.Ann.semanticDedup(h.index, "embedding", "vec_id", tau = 0.9)
       .select(col("vec_id"), col("cluster"))
       .transform(Reuse.cacheFresh("batch10.semanticDedupHier", _))
-  }, "semanticDedupHier")
+  })(_.count())
 
   /** Clamped cosine both engines share: Spark's cosine kernels clamp
     * to [-1,1] (float rounding pushes parallel-vector similarity to
@@ -191,15 +193,6 @@ object Batch10 {
        |      ON f.cluster // (SELECT k2 FROM k2v) = ca.cell)
        |  WHERE rn = 1)""".stripMargin
   }
-
-  /** Bench pre-touch hook — see [[Batch3.touchMemos]]. */
-  def touchMemos(s: SparkSession, dir: String): Unit =
-    fitThunks(s, dir).foreach(_._2())
-
-  /** See [[Batch3.fitThunks]]. */
-  def fitThunks(s: SparkSession, dir: String): Seq[(String, () => Unit)] = Seq(
-    "fit_semantic_dedup" -> (() => { semanticMemo(s, dir).count(); () }),
-    "fit_semantic_dedup_hier" -> (() => { semanticHierMemo(s, dir).count(); () }))
 
   /** CASE expression both engines share: per-language keep-threshold
     * out of 16384 hash buckets (power of two, so the signed
@@ -723,7 +716,7 @@ object Batch10 {
     // copies always collapse, kept set has no same-cluster pair >=
     // tau, deterministic) are additionally asserted in AnnSpec.
     "dedup_semantic" -> Q(
-      (s, dir) => semanticMemo(s, dir).orderBy("vec_id"),
+      (s, dir) => semanticDedup(s, dir).orderBy("vec_id"),
       Some(semanticOracleSql(
         s"""centers AS (
            |  SELECT cluster, CAST(center AS DOUBLE[]) AS cv
@@ -1343,7 +1336,7 @@ object Batch10 {
       "streaming corpus_budget_exact twin via flatMapGroupsWithState (single-batch replay == batch selection; hash-compared on the gate)"),
 
     // ---- SemDeDup through the forced hierarchical fit (see
-    // semanticHierMemo): same planted fixture, same tau, same output
+    // semanticDedupHier): same planted fixture, same tau, same output
     // shape as dedup_semantic, but the k-means fit runs through the
     // two-level coarse+per-cell-Lloyd machinery. The fit itself is
     // not DuckDB-replicable, but its RESULT is persisted (coarse +
@@ -1351,7 +1344,7 @@ object Batch10 {
     // the hash gate (r14); hier-fit drop-rule invariants additionally
     // live in AnnSpec.
     "dedup_semantic_hier" -> Q(
-      (s, dir) => semanticHierMemo(s, dir).orderBy("vec_id"),
+      (s, dir) => semanticDedupHier(s, dir).orderBy("vec_id"),
       Some(semanticOracleSql(
         s"""coarse AS (
            |  SELECT cluster, CAST(center AS DOUBLE[]) AS cv

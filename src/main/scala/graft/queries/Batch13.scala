@@ -462,7 +462,7 @@ object Batch13 {
     // run reads its own artifact.
     "bpe_encode_oracle" -> Q(
       (s, dir) => {
-        val m = Batch12.model(s, dir, 160)
+        val m = Batch12.bpeModel(s, dir)
         val path = persistBpeOnce(s, dir, m)
         val loaded = graft.ops.Bpe.load(s, path)
         graft.ops.Bpe.tokenCounts(
@@ -499,7 +499,7 @@ object Batch13 {
     "tune_lsh" -> Q(
       (s, dir) => {
         import s.implicits._
-        tuneLshMemo(s, dir)
+        tuneLsh(s, dir)
       },
       Some(tuneLshOracleSql),
       "LSH band/row calibration under the hash gate: divisor-grid detection math, largest-r-meeting-target choice, and measured recall of the persisted banding vs the exact >=0.5-Jaccard pair set"))
@@ -509,8 +509,9 @@ object Batch13 {
     * subtree is read INSIDE this builder — i.e. during the fit phase,
     * outside any MemoTrack entry scope — so bench attributes tune_lsh
     * only fit_tune_lsh as its dep; the pairCounts cost itself is
-    * timed by fit_pair_counts, which the fit phase runs first. */
-  private val tuneLshMemo = new SessionMemo[DataFrame]((s, dir) => {
+    * timed by fit_pair_counts, which the declared dep puts first. */
+  private val tuneLsh =
+    Artifact("tune_lsh", Artifact.CorpusScale, Batch3.pairCounts)((s, dir) => {
     import s.implicits._
     val n = 128; val t = 0.5; val pTarget = 0.9
     def q8(x: Double): Double = new java.math.BigDecimal(x)
@@ -566,12 +567,7 @@ object Batch13 {
       (b, r, p, if (r == rC) 1 else 0, if (r == rC) recall else -1.0) }
       .toDF("bands", "rows_per_band", "predicted", "chosen", "measured_recall")
       .orderBy("rows_per_band")
-  }, "tuneLsh")
-
-  /** Bench memo pre-touch hook (see [[Batch3.touchMemos]]): forces the
-    * tune_lsh artifact warm outside any timed window. */
-  def touchMemos(s: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    fitThunks(s, dir).foreach(_._2())
+  })(_.count())
 
   /** Persist the banding artifact once per corpus under the
     * no-mid-read-delete contract the other artifacts in this file
@@ -631,16 +627,6 @@ object Batch13 {
     }
     bandsOk.add(path)
   }
-
-  /** Bench fit-phase hook (see [[Batch3.fitThunks]]): times the
-    * tune_lsh memo build — signature fit, persisted banding artifact,
-    * recall counts — as its own `fit_tune_lsh` line instead of hiding
-    * it in warmup. Declared AFTER Batch3's thunks in Bench, so the
-    * shared ngramPairs subtree is already built and this line measures
-    * only tune_lsh's own increment. */
-  def fitThunks(s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(String, () => Unit)] = Seq(
-    "fit_tune_lsh" -> (() => { tuneLshMemo(s, dir).count(); () }))
 
   private def tuneLshOracleSql: String =
     s"""WITH grid(bands, rows_per_band) AS (VALUES

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.cosine_sim
 import graft.queries.Catalog.{Q, table, events}
+import graft.queries.Artifact.SampleBounded
 
 /** Query batch 4: wider SQL surface (cube, pivot, more window
   * functions, scalar subqueries) and more training-data ops (k-NN
@@ -33,7 +34,8 @@ object Batch4 {
     java.nio.file.Files.createTempDirectory("graft_keep_bloom_")
       .resolve("bloom.parquet").toAbsolutePath.toString
 
-  private[graft] val keepBloomMemo = new SessionMemo[Array[Byte]]((s, dir) => {
+  private[graft] val keepBloom =
+    Artifact("keep_bloom", SampleBounded, Batch3.pairCounts)((s, dir) => {
     val losers = Batch3.ngramPairs(s, dir).select(col("doc_b")).distinct()
     val keepers = table(s, dir, "documents").select(col("doc_id"))
       .join(losers, col("doc_id") === col("doc_b"), "left_anti")
@@ -41,17 +43,7 @@ object Batch4 {
     graft.ops.Scale.persistBloom(
       graft.ops.Scale.bloomKeyFilter(keepers, "doc_id"), s, path)
     graft.ops.Scale.loadBloom(s, path)
-  }, "keepBloom")
-  private def keepBloom(s: SparkSession, dir: String): Array[Byte] =
-    keepBloomMemo(s, dir)
-
-  /** Bench pre-touch hook — see [[Batch3.touchMemos]]. */
-  def touchMemos(s: SparkSession, dir: String): Unit =
-    fitThunks(s, dir).foreach(_._2())
-
-  /** See [[Batch3.fitThunks]]. */
-  def fitThunks(s: SparkSession, dir: String): Seq[(String, () => Unit)] =
-    Seq("fit_keep_bloom" -> (() => { keepBloomMemo(s, dir); () }))
+  })(_ => ())
 
   /** Brute-force k-NN-join oracle over the vec_id < 5 query set,
     * shared by the exhaustive batched joins (flat, two-level, and the

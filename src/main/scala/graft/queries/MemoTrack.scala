@@ -3,11 +3,10 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 
 /** Driver-side memo-readership ledger: which catalog entries read
-  * which shared fitted artifact ([[SessionMemo]] labels, plus the BPE
-  * model memo). Bench derives its `amortized` list and per-entry
-  * `fit_deps` from THIS — never from a hand-maintained Seq, which the
-  * r13 verdict caught going stale twice (it missed `ann_tune_nprobe`
-  * and `bpe_encode_oracle`).
+  * which shared fitted [[Artifact]] (by artifact name). Bench derives
+  * its `amortized` list and per-entry `fit_deps` from THIS — never
+  * from a hand-maintained Seq, which the r13 verdict caught going
+  * stale twice (it missed `ann_tune_nprobe` and `bpe_encode_oracle`).
   *
   * Mechanics: Bench wraps each catalog-entry build in [[within]],
   * which pins the entry name in a ThreadLocal; every memo access
@@ -15,10 +14,7 @@ import java.util.concurrent.ConcurrentHashMap
   * [[record]] with the memo's label. Memo reads all happen at
   * plan-construction time on the calling thread, so a plain
   * ThreadLocal suffices; accesses outside any [[within]] scope (fit
-  * phase, Verify, tests) are ignored. The fit-line naming convention
-  * is mechanical: the bench line for a memo labeled `L` is `fit_L`,
-  * so readership translates to fit_deps without a second mapping
-  * table that could itself go stale. */
+  * phase, Verify, tests) are ignored. */
 object MemoTrack {
   private val current = new ThreadLocal[String]
   private val reads =
@@ -48,16 +44,6 @@ object MemoTrack {
     if (s == null) Seq.empty
     else { import scala.jdk.CollectionConverters._; s.asScala.toSeq.sorted }
   }
-
-  /** The bench line name for a memo label: `fit_` + the label in
-    * snake_case. Snake_case is LOAD-BEARING, not style: every floor
-    * parser in the pipeline (bench_to_baseline.py, Bench's
-    * baseline-aware rescue, the judge's table reads) matches rows
-    * with `[a-z0-9_]+` — a camelCase bench line silently falls out of
-    * every floor table. Each batch's fitThunks names must equal
-    * fitName(label) of the memo the thunk builds. */
-  def fitName(label: String): String =
-    "fit_" + label.replaceAll("([A-Z])", "_$1").toLowerCase
 
   def clear(): Unit = reads.clear()
 }

@@ -5,7 +5,9 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 
 /** Per-(SparkSession, sf-dir) memo for expensive shared subtrees (the
-  * near-dup pair graph, the IVF index). Two staleness defenses:
+  * near-dup pair graph, the IVF index): the unregistered primitive
+  * each [[Artifact]] builds through, and that tests construct
+  * directly. Two staleness defenses:
   *
   *  - entries belonging to stopped sessions are swept on every access,
   *    so the map cannot pin SparkSession references or checkpointed
@@ -73,8 +75,6 @@ final class SessionMemo[V](build: (SparkSession, String) => V,
     } catch { case _: Exception => 0L }
   }
 
-  SessionMemo.registerEvictor(label, () => clear())
-
   def apply(s: SparkSession, dir: String): V = {
     // readership ledger (hit or build — a warm read is still a
     // dependency): Bench derives `amortized`/`fit_deps` from this
@@ -98,64 +98,6 @@ final class SessionMemo[V](build: (SparkSession, String) => V,
 }
 
 object SessionMemo {
-  /** Cold-eviction hooks by memo label. Every [[SessionMemo]]
-    * self-registers at construction; hand-rolled memos (the BPE model
-    * map in Batch12) register explicitly. Bench's fit-rescue path
-    * needs this to make a `fit_*` retry GENUINELY cold (r14 verdict):
-    * a plain thunk rerun would read the memo and time ~0, proving
-    * nothing about the build. Labels are unique across the catalog by
-    * the fitThunks naming convention, so last-write-wins is moot. */
-  private val evictors =
-    new ConcurrentHashMap[String, () => Unit]
-
-  private[queries] def registerEvictor(label: String, f: () => Unit): Unit =
-    evictors.put(label, f)
-
-  /** Evict the memo registered under `label` (the raw memo label, as
-    * recorded by [[MemoTrack]] readership — NOT the `fit_` bench-line
-    * name); false when no memo carries that label. ScaleGrowthSpec
-    * uses this to make every timed point of a growth measurement
-    * genuinely cold (ADVICE r16: a settle run warming the smallest
-    * scale's memo while sf0.1 paid the cold fit made the slope check
-    * asymmetric and its rescue rerun vacuous). */
-  private[graft] def evict(label: String): Boolean = {
-    val f = evictors.get(label)
-    if (f != null) f()
-    f != null
-  }
-
-  /** Evict the memo behind bench line `fit_<label>`; false when no
-    * registered memo maps to that line (then a retry cannot be made
-    * cold and the caller must not fake one). Safe only BEFORE any
-    * consumer entry has run — Bench's fit phase precedes warmup, so
-    * downstream entries see exactly one (the retried) build. Cached
-    * blocks of the evicted build that went through a bare
-    * [[Reuse.cache]] are not reclaimed until session end — bounded at
-    * one extra build per retried line, by the one-retry cap. */
-  private[graft] def evictFit(fitLine: String): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val hit = evictors.asScala.find {
-      case (l, _) => MemoTrack.fitName(l) == fitLine
-    }
-    hit.foreach(_._2())
-    hit.nonEmpty
-  }
-
-  /** Clear EVERY registered memo. Pairs with a session-global
-    * `cacheManager.clearCache()`: that wipe strips cached blocks out
-    * from under memoized values whose builders ended in a bare
-    * [[Reuse.cache]], and any memo NOT evicted afterwards keeps
-    * serving a DataFrame whose persist entry is gone — the optimizer
-    * then collapses the materialization boundary and downstream plans
-    * lose the pruning the cache encoded (the r17 PlanSpec
-    * ann_ivf_hier_topk failure). After clearAll, every memo rebuilds
-    * lazily on next access and re-persists — correct in any suite
-    * order. */
-  private[graft] def clearAll(): Unit = {
-    import scala.jdk.CollectionConverters._
-    evictors.asScala.values.foreach(_())
-  }
-
   /** How long a computed dir fingerprint is trusted before re-walking.
     * 5 s keeps a full catalog run (~100 queries) at a handful of walks
     * while still catching any between-run rewrite. Re-read per access

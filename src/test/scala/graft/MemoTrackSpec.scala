@@ -3,9 +3,7 @@ package graft
 import graft.queries.MemoTrack
 
 /** The memo-readership ledger Bench derives `amortized`/`fit_deps`
-  * from, plus the fit-line naming coherence the derivation rests on:
-  * a fit thunk named differently from the memo label it builds would
-  * produce fit_deps pointing at bench lines that don't exist. */
+  * from (the registry side of that derivation is in ArtifactSpec). */
 class MemoTrackSpec extends SparkTestBase {
 
   test("within/record/readsOf: attribution is per-scope, nesting restores, unscoped reads ignored") {
@@ -24,13 +22,6 @@ class MemoTrackSpec extends SparkTestBase {
     assert(MemoTrack.readsOf("q1") === Seq.empty)
   }
 
-  test("fitName: snake_case derivation (floor parsers only match [a-z0-9_]+ rows)") {
-    assert(MemoTrack.fitName("pairCounts") === "fit_pair_counts")
-    assert(MemoTrack.fitName("semanticDedupHier") === "fit_semantic_dedup_hier")
-    assert(MemoTrack.fitName("sq8Index") === "fit_sq8_index")
-    assert(MemoTrack.fitName("bpeModel") === "fit_bpe_model")
-  }
-
   test("no __GRAFT_ placeholder survives substituteOraclePaths in any oracle SQL") {
     // a token used in SQL but missing from the substitution chain
     // would reach DuckDB verbatim and fail the driver gate as an
@@ -46,31 +37,5 @@ class MemoTrackSpec extends SparkTestBase {
     val tok = graft.queries.Batch13.BpeOraclePathToken
     assert(graft.queries.Batch13.substituteOraclePaths(tok, "/a")
       !== graft.queries.Batch13.substituteOraclePaths(tok, "/b"))
-  }
-
-  test("every fit thunk's name equals fitName(label) of the memo it actually builds") {
-    // run each thunk under its own MemoTrack scope on the smallest
-    // fixture and check the recorded label round-trips to the thunk's
-    // own name — the mechanical convention Bench's fit_deps derivation
-    // rests on. A thunk may TRANSITIVELY read other memos (sq8 builds
-    // on ivf); the requirement is that its own memo is among them.
-    val dir = sf("sf0.001")
-    val thunks =
-      graft.queries.Batch3.fitThunks(spark, dir) ++
-      graft.queries.Batch4.fitThunks(spark, dir) ++
-      graft.queries.Batch9.fitThunks(spark, dir) ++
-      graft.queries.Batch10.fitThunks(spark, dir) ++
-      graft.queries.Batch12.fitThunks(spark, dir)
-    assert(thunks.map(_._1).distinct.size === thunks.size, "duplicate fit names")
-    thunks.foreach { case (fname, thunk) =>
-      assert(fname.matches("fit_[a-z0-9_]+"),
-        s"$fname must be fit_<snake_case> — camelCase falls out of every floor parser")
-      MemoTrack.clear()
-      MemoTrack.within(s"spec-$fname")(thunk())
-      val fits = MemoTrack.readsOf(s"spec-$fname").map(MemoTrack.fitName)
-      assert(fits.contains(fname),
-        s"thunk $fname recorded labels ${fits.mkString(",")} — its own memo label must round-trip to its name")
-    }
-    MemoTrack.clear()
   }
 }

@@ -28,9 +28,9 @@ package graft
   *    magnitude of it (slowest observed ~10 s at local[4]).
   *
   * Memo regime (r16 ADVICE): every timed point — and the rescue rerun
-  * — is memo-COLD. The entry's [[graft.queries.SessionMemo]] labels
+  * — is memo-COLD. The entry's [[graft.queries.Artifact]]s
   * (discovered from the settle run's MemoTrack readership) are evicted
-  * before each timed run, so SessionMemo-backed entries (e.g.
+  * before each timed run, so artifact-backed entries (e.g.
   * ann_ivf_knn_join's IVF fit) pay their full build cost at every
   * scale and fit growth is measured INSIDE the slope, not warmed away.
   *
@@ -127,11 +127,11 @@ class ScaleGrowthSpec extends SparkTestBase {
         s"fixture degenerate: $tableName rows ${rows.mkString("/")}")
       // one untimed run at the smallest scale settles JIT/classloader/
       // codegen cold-start out of the measured points — and, via the
-      // MemoTrack scope in runCapped, records which SessionMemo labels
-      // the entry reads, so the timed runs below can evict them
+      // MemoTrack scope in runCapped, records which artifacts the
+      // entry reads, so the timed runs below can evict them
       runCapped(name, sf(sfs.head))
       // every timed point (and the rescue rerun) is memo-COLD: evict
-      // the entry's memos first, so SessionMemo-backed entries pay
+      // the entry's memos first, so artifact-backed entries pay
       // their full fit cost at every scale. ADVICE r16: without this
       // the settle run warmed the smallest scale's memo (tHead = query
       // path only, floored at 0.05) while the first sf0.1 run paid the
@@ -140,12 +140,12 @@ class ScaleGrowthSpec extends SparkTestBase {
       // growth. Uniform eviction makes head, top, and rescue measure
       // the same (cold) cost, so fit growth is inside the slope.
       def cold(s: String): Double = {
-        // a memo without an eviction hook silently stays warm — the
-        // exact "must not fake a cold run" failure evictFit's doc
+        // a read label with no declared artifact stays warm — the
+        // exact "must not fake a cold run" failure Artifact.evict's doc
         // warns about (ADVICE r17) — so surface it instead of
         // discarding evict's return
         graft.queries.MemoTrack.readsOf(name).foreach { label =>
-          if (!graft.queries.SessionMemo.evict(label))
+          if (!graft.queries.Artifact.evict(label))
             info(s"memo '$label' has no evictor — timed point NOT cold for it")
         }
         // evicting the memo map is not enough for builders that end in
@@ -163,7 +163,7 @@ class ScaleGrowthSpec extends SparkTestBase {
         // evicts every registered memo so rebuilds stay lazy, cheap,
         // and cache-consistent in any suite order.
         spark.sharedState.cacheManager.clearCache()
-        graft.queries.SessionMemo.clearAll()
+        graft.queries.Artifact.clearAll()
         math.max(0.05, runCapped(name, sf(s)))
       }
       val times = sfs.map(cold)
@@ -190,9 +190,10 @@ class ScaleGrowthSpec extends SparkTestBase {
   // fit_bpe_model are the two heaviest bench lines without a growth
   // guard, and the sf0.1 fixture cannot demonstrate core scaling — so
   // their wall-time growth is pinned here instead, across the
-  // boilerplate corpus's genuine 100× doc span. The thunks are the
-  // bench fit phase's own (memoized) builders; every timed point is
-  // memo-cold via the same clearAll discipline as the entries above.
+  // boilerplate corpus's genuine 100× doc span. Each point runs the
+  // artifact's own `fit`, what the bench fit line times; every timed
+  // point is memo-cold via the same clearAll discipline as the entries
+  // above.
   private def runCappedThunk(label: String, thunk: () => Unit): Double = {
     val group = s"growth-$label"
     val out = new java.util.concurrent.atomic.AtomicReference[Option[Double]](None)
@@ -218,18 +219,18 @@ class ScaleGrowthSpec extends SparkTestBase {
     out.get().getOrElse(fail(s"$label produced no timing"))
   }
 
-  for ((fitLine, mkThunk) <- Seq[(String, String => () => Unit)](
-      "fit_pair_counts" ->
-        (d => graft.queries.Batch3.fitThunks(spark, d).toMap.apply("fit_pair_counts")),
-      "fit_bpe_model" ->
-        (d => graft.queries.Batch12.fitThunks(spark, d).toMap.apply("fit_bpe_model"))))
+  for (fitLine <- Seq("fit_pair_counts", "fit_bpe_model"))
     test(s"$fitLine: sub-quadratic on the boilerplate corpus (100x doc span)") {
+      SparkEntry.queries // loading the catalog registers every artifact
+      val artifact = graft.queries.Artifact.all.find(_.fitLine == fitLine)
+        .getOrElse(fail(s"no artifact times $fitLine"))
+      def mkThunk(d: String): () => Unit = () => artifact.fit(spark, d)
       val tiers = Seq(300L, 3000L, 30000L)
       val dirs = tiers.map(n => BoilerplateCorpus.write(spark, n, 10))
       runCappedThunk(fitLine, mkThunk(dirs.head)) // settle JIT/codegen
       def cold(d: String): Double = {
         spark.sharedState.cacheManager.clearCache()
-        graft.queries.SessionMemo.clearAll()
+        graft.queries.Artifact.clearAll()
         math.max(0.05, runCappedThunk(fitLine, mkThunk(d)))
       }
       val times = dirs.map(cold)
@@ -272,7 +273,7 @@ class ScaleGrowthSpec extends SparkTestBase {
       runCapped(entry, dirs.head) // settle JIT/codegen out of the timed points
       def cold(d: String): Double = {
         spark.sharedState.cacheManager.clearCache()
-        graft.queries.SessionMemo.clearAll()
+        graft.queries.Artifact.clearAll()
         math.max(0.05, runCapped(entry, d))
       }
       val times = dirs.map(cold)

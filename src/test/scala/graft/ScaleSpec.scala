@@ -158,8 +158,8 @@ class ScaleSpec extends SparkTestBase {
     val p2 = graft.queries.Batch4.bloomScratchPath()
     assert(p1 !== p2, s"scratch path not unique per build: $p1")
     // two dirs build INDEPENDENT blooms...
-    val b1 = graft.queries.Batch4.keepBloomMemo(spark, sf("sf0.001"))
-    val b2 = graft.queries.Batch4.keepBloomMemo(spark, sf("sf0.01"))
+    val b1 = graft.queries.Batch4.keepBloom(spark, sf("sf0.001"))
+    val b2 = graft.queries.Batch4.keepBloom(spark, sf("sf0.01"))
     assert(!java.util.Arrays.equals(b1, b2))
     // ...and each dir's bloom passes EVERY keeper of its own dir (a
     // mismatched bloom would fail this with ~certainty: the sf0.01

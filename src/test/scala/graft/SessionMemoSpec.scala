@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.queries.SessionMemo
+import graft.queries.{Artifact, Batch12, SessionMemo}
 
 /** SessionMemo staleness: same data → one build; rewritten data under
   * the same dir → fresh build (the r4 advice item — stale checkpointed
@@ -38,20 +38,36 @@ class SessionMemoSpec extends SparkTestBase {
     assert(builds === 3)
   }
 
-  test("evictFit makes the next access a genuinely cold rebuild") {
-    val dir = Files.createTempDirectory("graftmemoevict").toString
-    Files.write(Paths.get(dir, "f"), "data".getBytes)
-    var builds = 0
-    val memo = new SessionMemo[Int]((_, _) => { builds += 1; builds },
-      "evictProbe")
-    assert(memo(spark, dir) === 1)
-    assert(memo(spark, dir) === 1 && builds === 1)
-    // the bench fit-retry path: fit_<snake_case(label)> resolves the
-    // registered evictor; the next access rebuilds
-    assert(SessionMemo.evictFit("fit_evict_probe"))
-    assert(memo(spark, dir) === 2 && builds === 2)
-    // unknown fit line: no evictor — the caller must not fake a retry
-    assert(!SessionMemo.evictFit("fit_no_such_memo"))
+  test("Artifact.evict makes the next access a genuinely cold rebuild") {
+    SparkEntry.queries // loading the catalog registers every artifact
+    val dir = sf("sf0.001")
+    val model = Batch12.bpeModel
+    val first = model(spark, dir)
+    assert(model(spark, dir) eq first) // cached
+    // the bench fit-retry path: evicting by artifact name makes the
+    // next access rebuild
+    assert(Artifact.evict(model.name))
+    assert(!(model(spark, dir) eq first))
+    // unknown name: nothing to evict — the caller must not fake a retry
+    assert(!Artifact.evict("no_such_artifact"))
+  }
+
+  test("bpe_model refits after its corpus dir is rewritten") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graftbpe").toString
+    def corpus(texts: String*) = texts.zipWithIndex
+      .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    def write(df: org.apache.spark.sql.DataFrame): Unit =
+      df.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val a = corpus("lower lowest newer newest", "low lower wider")
+    val b = corpus("banana bandana cabana", "anna banana")
+    write(a)
+    val fitA = Batch12.bpeModel(spark, dir)
+    assert(fitA.merges === graft.ops.Bpe.train(a, "text", 160).merges)
+    write(b)
+    val fitB = Batch12.bpeModel(spark, dir)
+    assert(fitB.merges === graft.ops.Bpe.train(b, "text", 160).merges)
+    assert(fitA.merges !== fitB.merges)
   }
 
   test("distinct dirs memoize independently") {
