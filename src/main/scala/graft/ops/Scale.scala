@@ -110,36 +110,64 @@ object Scale {
     * condition with the cheap dedup conjuncts first and `verify` last;
     * conjunct order inside a single condition expression survives
     * equi-key extraction, so the expensive predicate runs exactly once
-    * per surviving candidate pair. */
+    * per surviving candidate pair.
+    *
+    * Selection: the guard is paid for only where a block is hot. When
+    * the plan is built, the hot-block size pass that
+    * [[triangleReplicate]] joins on runs ONCE, eagerly, as one
+    * aggregate action over `df` (which also materializes a lazily
+    * cached `df`). When no block has more than `cap` members every g
+    * is 1, so the triangle scheme would only add the size join, the
+    * `explode` and the three-key join; the plan is then the plain
+    * self-join
+    * {{{ a.block = b.block AND a.id < b.id AND verify }}}
+    * in one join condition, cheap conjuncts first, with the same
+    * output schema. On the seed-11 perfbench corpus (max df 80 against
+    * cap 1024; 4-core host) the guarded join cost ~3× the plain one. */
   def blockedSelfJoinPairs(df: DataFrame, blockCol: String, idCol: String,
       cap: Int = 1024, maxGroups: Int = 64,
       verify: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    val repl = triangleReplicate(df, blockCol, idCol, cap, maxGroups)
-    def side(suffix: String): DataFrame =
-      repl.columns.foldLeft(repl)((d, c) => d.withColumnRenamed(c, c + suffix))
-    val a = side("_a")
-    val b = side("_b")
+    val guarded = !hotBlocks(df, blockCol, cap, maxGroups).isEmpty
+    // block column first either way: the guarded input gets it there
+    // from the size join's USING key
+    val in =
+      if (guarded) triangleReplicate(df, blockCol, idCol, cap, maxGroups)
+      else df.select(blockCol, df.columns.filter(_ != blockCol): _*)
+    def side(suffix: String): DataFrame = in.toDF(in.columns.map(_ + suffix): _*)
+    def same(c: String): Column = col(c + "_a") === col(c + "_b")
+    val idOrder = col(idCol + "_a") < col(idCol + "_b")
     val cond =
-      col(blockCol + "_a") === col(blockCol + "_b") &&
-        col("__lo_a") === col("__lo_b") && col("__hi_a") === col("__hi_b") &&
-        col(idCol + "_a") < col(idCol + "_b") &&
-        // same-group pairs appear in every task containing their
-        // group: keep only the diagonal occurrence
-        (col("__gid_a") =!= col("__gid_b") || col("__lo_a") === col("__hi_a")) &&
-        verify
-    a.join(b, cond)
+      if (guarded)
+        same(blockCol) && same("__lo") && same("__hi") && idOrder &&
+          // same-group pairs appear in every task containing their
+          // group: keep only the diagonal occurrence
+          (col("__gid_a") =!= col("__gid_b") || col("__lo_a") === col("__hi_a")) &&
+          verify
+      else same(blockCol) && idOrder && verify
+    side("_a").join(side("_b"), cond)
       .withColumnRenamed(blockCol + "_a", blockCol)
       .drop(blockCol + "_b", "__lo_a", "__hi_a", "__lo_b", "__hi_b",
         "__gid_a", "__gid_b")
   }
 
+  /** `(blockCol, __g)` for every block with more than `cap` members:
+    * its group count g = ceil(size / cap), clamped to `maxGroups`. */
+  private def hotBlocks(df: DataFrame, blockCol: String, cap: Int,
+      maxGroups: Int): DataFrame = {
+    require(cap > 0 && maxGroups > 0)
+    df.groupBy(blockCol).agg(count(lit(1)).as("__bn"))
+      .filter(col("__bn") > cap)
+      .select(col(blockCol),
+        least(ceil(col("__bn").cast("double") / cap), lit(maxGroups))
+          .cast("int").as("__g"))
+  }
+
   /** The replicated-and-task-keyed frame [[blockedSelfJoinPairs]]
-    * self-joins on `(blockCol, __lo, __hi)`. Exposed to ops so the
-    * per-task candidate bound is assertable against the REAL join
-    * input, not a re-derivation. */
+    * self-joins on `(blockCol, __lo, __hi)` when a block is hot.
+    * Exposed to ops so the per-task candidate bound is assertable
+    * against the REAL join input, not a re-derivation. */
   private[graft] def triangleReplicate(df: DataFrame, blockCol: String,
       idCol: String, cap: Int, maxGroups: Int): DataFrame = {
-    require(cap > 0 && maxGroups > 0)
     // r21 (guide §2.3/§3.1): only HOT blocks (size > cap ⟺ g > 1) need
     // replication metadata — join the size table FILTERED to them,
     // LEFT, and coalesce misses to g = 1. The filtered side is tiny on
@@ -153,12 +181,7 @@ object Scale {
     // local[32] tuning. Group assignment for hot blocks is unchanged
     // and cold blocks get the same g = 1 the full join gave them, so
     // the emitted pair set is bit-identical (ScaleSpec re-proves it).
-    val hot = df.groupBy(blockCol).agg(count(lit(1)).as("__bn"))
-      .filter(col("__bn") > cap)
-      .select(col(blockCol),
-        least(ceil(col("__bn").cast("double") / cap), lit(maxGroups))
-          .cast("int").as("__g"))
-    df.join(hot, Seq(blockCol), "left")
+    df.join(hotBlocks(df, blockCol, cap, maxGroups), Seq(blockCol), "left")
       .withColumn("__g", coalesce(col("__g"), lit(1)))
       .withColumn("__gid", pmod(xxhash64(col(idCol)), col("__g")).cast("int"))
       .withColumn("__q", explode(sequence(lit(0), col("__g") - 1)))

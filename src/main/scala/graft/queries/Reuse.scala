@@ -58,6 +58,8 @@ object Reuse {
   private val freshEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
   private val freshReg =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val freshBuilds = new java.util.concurrent.ConcurrentHashMap[
+    String, java.util.concurrent.atomic.AtomicLong]()
   private[queries] val epochCol = "__graft_cache_epoch"
 
   /** [[cache]] for subtrees rooted at SHARED (fixture) paths: persist
@@ -87,8 +89,16 @@ object Reuse {
     marked.persist(StorageLevel.MEMORY_AND_DISK)
     val prev = freshReg.put(site, marked)
     if (prev != null) prev.unpersist(blocking = false)
+    freshBuilds.computeIfAbsent(site, _ => new java.util.concurrent.atomic.AtomicLong)
+      .incrementAndGet()
     marked.drop(epochCol)
   }
+
+  /** How many [[cacheFresh]] builds `site` has registered in this JVM:
+    * each one is a separate computation of the subtree, so a shared
+    * subtree that is meant to be built once per job can be counted. */
+  private[graft] def freshBuildsOf(site: String): Long =
+    Option(freshBuilds.get(site)).fold(0L)(_.get)
 
   /** Drop the cached blocks currently registered for `site` (test /
     * memory-pressure hook). Frames built from them stay valid —

@@ -168,4 +168,17 @@ class DedupSpec extends SparkTestBase {
     // sentinel discipline: non-chosen rows carry -1.0, never null
     rows.filter(_.getInt(3) == 0).foreach(r => assert(r.getDouble(4) === -1.0))
   }
+
+  test("dedup job mines the pair graph once: jaccard, containment, clusters") {
+    import graft.queries.{Artifact, Reuse}
+    spark.sharedState.cacheManager.clearCache()
+    Artifact.clearAll()
+    val sites = Seq("batch3.pairCounts", "batch3.minePairCounts.inv")
+    val before = sites.map(Reuse.freshBuildsOf)
+    for (q <- Seq("dedup_ngram_jaccard", "dedup_containment", "dedup_clusters"))
+      assert(Catalog.queries(q)(spark, dir).collect().nonEmpty, q)
+    // one pair_counts memo build, over one build of its inverted index
+    assert(sites.map(Reuse.freshBuildsOf).zip(before).map { case (a, b) => a - b }
+      === Seq(1L, 1L))
+  }
 }

@@ -406,6 +406,31 @@ class ScaleSpec extends SparkTestBase {
     p.contains("__lo") && p.contains("__hi")
   }
 
+  test("pair miner with no hot shingle runs the plain self-join: no triangle, counts exact") {
+    // 3,000 docs, 10% sharing the boilerplate sentence: its two
+    // shingles have df = 300, under the miner's cap (1024), so the
+    // size check must pick the plain self-join
+    val dir = BoilerplateCorpus.write(spark, 3000)
+    val inv = graft.queries.Batch3.shingleInv(graft.queries.Batch3.shingleDocs(spark, dir), None)
+    assert(inv.groupBy("shash").count().agg(max("count")).head().getLong(0) === 300L)
+    val mined = graft.queries.Batch3.minePairCounts(spark, dir)
+    assert(!minedHasGuard(mined), "no block is hot, yet the miner planned the triangle guard")
+    // the naive self-join, with sizes counted from the index rows (not
+    // from the carried n_sh the miner groups by)
+    val sizes = inv.groupBy("doc_id").agg(count(lit(1)).as("n"))
+    val naive = inv.select($"doc_id".as("doc_a"), $"shash")
+      .join(inv.select($"doc_id".as("doc_b"), $"shash"), "shash")
+      .filter($"doc_a" < $"doc_b")
+      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("inter"))
+      .join(sizes.select($"doc_id".as("doc_a"), $"n".as("na")), "doc_a")
+      .join(sizes.select($"doc_id".as("doc_b"), $"n".as("nb")), "doc_b")
+      .select("doc_a", "doc_b", "inter", "na", "nb")
+    val got = mined.select("doc_a", "doc_b", "inter", "na", "nb")
+    assert(got.dtypes === naive.dtypes)
+    assert(got.count() === naive.count())
+    assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty)
+  }
+
   test("incrementalKeeps rides the grid guard: hot shingle splits, bound holds, keeps exact") {
     // 30k docs with the boilerplate sentence in every 7th (coprime to
     // the entry's doc_id % 10 shard cut, so the hot shingles exist on
@@ -488,6 +513,30 @@ class ScaleSpec extends SparkTestBase {
     val got = out.select($"doc_id_a", $"doc_id_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === naive)
+  }
+
+  test("blockedSelfJoinPairs without a hot block: one join, id order before verify") {
+    val docs = skewedDocs(60) // largest block 60, under the default cap
+    val out = Scale.blockedSelfJoinPairs(docs, "block", "doc_id",
+      verify = levenshtein($"text_a", $"text_b") <= 15)
+    assert(!out.queryExecution.analyzed.toString.contains("__lo"))
+    val joins = out.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      .split('\n').filter(_.contains("Join"))
+    assert(joins.length === 1, joins.mkString("\n"))
+    val cond = joins.head
+    val idCmp = cond.indexOf("doc_id_a")
+    val lev = cond.indexOf("levenshtein")
+    assert(idCmp >= 0 && lev > idCmp, s"id order must precede verify: $cond")
+    val naive = docs.select($"block", $"doc_id".as("a"), $"text".as("ta"))
+      .join(docs.select($"block", $"doc_id".as("b"), $"text".as("tb")), "block")
+      .filter($"a" < $"b" && levenshtein($"ta", $"tb") <= 15)
+      .select($"a", $"b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = out.select($"doc_id_a", $"doc_id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length === got.toSet.size)
+    assert(got.toSet === naive)
+    // the same output schema as the guarded path (cap 16: the block is hot)
+    assert(out.schema === Scale.blockedSelfJoinPairs(docs, "block", "doc_id", cap = 16).schema)
   }
 
   /** Adversarial asymmetric fixture: a hot key shared by both sides
