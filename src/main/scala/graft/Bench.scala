@@ -108,7 +108,7 @@ object Bench {
       .master(s"local[$cpus]")
       .appName("graft-bench")
       // the graft optimizer rules run on the graded path: the oracle
-      // gate itself proves WindowTopKRewrite result-identical per round
+      // gate itself proves RangeJoinRewrite result-identical per round
       .withExtensions(new graft.plans.GraftOptimizations())
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")

@@ -10,7 +10,7 @@ object Verify {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       // the graft optimizer rules run on the graded path: the oracle
-      // gate itself proves WindowTopKRewrite result-identical per round
+      // gate itself proves RangeJoinRewrite result-identical per round
       .withExtensions(new graft.plans.GraftOptimizations())
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.functions.HashOps
 
@@ -46,14 +45,6 @@ object Multimodal {
   // too: this runs in the object initializer, which every JVM that
   // touches a kernel executes before its first decode.
   javax.imageio.ImageIO.setUseCache(false)
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media", BinaryType),
-    StructField("meta", StructType(Seq(
-      StructField("mime", StringType),
-      StructField("width", IntegerType),
-      StructField("height", IntegerType))))))
 
   final case class MediaFeature(
       media_id: Long, n_bytes: Int, content_hash: Long,

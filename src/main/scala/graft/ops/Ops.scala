@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.{fnv64, json_upper, uuid_v7}
@@ -27,10 +27,6 @@ object Ops {
     df => df.withColumn(out,
       to_timestamp(get_json_object(col(payloadCol), "$.eventTime"),
         "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-
-  /** T1: generic 1:1 column map. */
-  def mapColumns(cols: (String, Column)*): Op =
-    df => cols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
 
   /** P1+P2: hash fan-out. Parity mode uses the reference's FNV-1a 64 of
     * the payload (`partitioner/hash.go:19-31` hashes the formatted job

@@ -113,13 +113,13 @@ object Scale {
     * per surviving candidate pair.
     *
     * Selection: the guard is paid for only where a block is hot. When
-    * the plan is built, the hot-block size pass that
-    * [[triangleReplicate]] joins on runs ONCE, eagerly, as one
+    * the plan is built, [[hotBlocks]] runs ONCE, eagerly, as one
     * aggregate action over `df` (which also materializes a lazily
-    * cached `df`). When no block has more than `cap` members every g
-    * is 1, so the triangle scheme would only add the size join, the
-    * `explode` and the three-key join; the plan is then the plain
-    * self-join
+    * cached `df`), and its collected result is the hot set
+    * [[triangleReplicate]] joins on. When no block has more than `cap`
+    * members every g is 1, so the triangle scheme would only add the
+    * size join, the `explode` and the three-key join; the plan is then
+    * the plain self-join
     * {{{ a.block = b.block AND a.id < b.id AND verify }}}
     * in one join condition, cheap conjuncts first, with the same
     * output schema. On the seed-11 perfbench corpus (max df 80 against
@@ -127,12 +127,14 @@ object Scale {
   def blockedSelfJoinPairs(df: DataFrame, blockCol: String, idCol: String,
       cap: Int = 1024, maxGroups: Int = 64,
       verify: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    val guarded = !hotBlocks(df, blockCol, cap, maxGroups).isEmpty
+    val hot = hotBlocks(df, blockCol, cap, maxGroups)
+    val guarded = hot.isDefined
     // block column first either way: the guarded input gets it there
     // from the size join's USING key
-    val in =
-      if (guarded) triangleReplicate(df, blockCol, idCol, cap, maxGroups)
-      else df.select(blockCol, df.columns.filter(_ != blockCol): _*)
+    val in = hot match {
+      case Some(h) => triangleReplicate(df, blockCol, idCol, h)
+      case None => df.select(blockCol, df.columns.filter(_ != blockCol): _*)
+    }
     def side(suffix: String): DataFrame = in.toDF(in.columns.map(_ + suffix): _*)
     def same(c: String): Column = col(c + "_a") === col(c + "_b")
     val idOrder = col(idCol + "_a") < col(idCol + "_b")
@@ -151,37 +153,39 @@ object Scale {
   }
 
   /** `(blockCol, __g)` for every block with more than `cap` members:
-    * its group count g = ceil(size / cap), clamped to `maxGroups`. */
-  private def hotBlocks(df: DataFrame, blockCol: String, cap: Int,
-      maxGroups: Int): DataFrame = {
+    * its group count g = ceil(size / cap), clamped to `maxGroups`.
+    * Collected in one eager job into a local frame (None when no block
+    * is hot). Each hot block holds more than `cap` rows, so the set has
+    * at most |df| / cap rows: the boilerplate keys on any real corpus. */
+  private[graft] def hotBlocks(df: DataFrame, blockCol: String, cap: Int,
+      maxGroups: Int): Option[DataFrame] = {
     require(cap > 0 && maxGroups > 0)
-    df.groupBy(blockCol).agg(count(lit(1)).as("__bn"))
+    val sizes = df.groupBy(blockCol).agg(count(lit(1)).as("__bn"))
       .filter(col("__bn") > cap)
       .select(col(blockCol),
         least(ceil(col("__bn").cast("double") / cap), lit(maxGroups))
           .cast("int").as("__g"))
+    val rows = sizes.collectAsList()
+    if (rows.isEmpty) None
+    else Some(df.sparkSession.createDataFrame(rows, sizes.schema))
   }
 
   /** The replicated-and-task-keyed frame [[blockedSelfJoinPairs]]
-    * self-joins on `(blockCol, __lo, __hi)` when a block is hot.
-    * Exposed to ops so the per-task candidate bound is assertable
-    * against the REAL join input, not a re-derivation. */
+    * self-joins on `(blockCol, __lo, __hi)` when a block is hot; `hot`
+    * is the [[hotBlocks]] set. Exposed to ops so the per-task candidate
+    * bound is assertable against the REAL join input, not a
+    * re-derivation. */
   private[graft] def triangleReplicate(df: DataFrame, blockCol: String,
-      idCol: String, cap: Int, maxGroups: Int): DataFrame = {
+      idCol: String, hot: DataFrame): DataFrame = {
     // r21 (guide §2.3/§3.1): only HOT blocks (size > cap ⟺ g > 1) need
-    // replication metadata — join the size table FILTERED to them,
-    // LEFT, and coalesce misses to g = 1. The filtered side is tiny on
-    // any real corpus (it is the boilerplate keys), so AQE converts
-    // the join to a runtime broadcast and the DATA side is no longer
-    // shuffled by block just to learn its group count (the previous
-    // inner join of the full size table shuffled every row twice: once
-    // for the sizes join, once for the pair join). On an adversarial
-    // corpus where the hot set itself is huge, AQE simply keeps the
-    // shuffle join — the fallback is automatic and size-based, not a
-    // local[32] tuning. Group assignment for hot blocks is unchanged
-    // and cold blocks get the same g = 1 the full join gave them, so
-    // the emitted pair set is bit-identical (ScaleSpec re-proves it).
-    df.join(hotBlocks(df, blockCol, cap, maxGroups), Seq(blockCol), "left")
+    // replication metadata — join the hot set LEFT and coalesce misses
+    // to g = 1. The hot set is a local frame, broadcast whenever it is
+    // under Spark's broadcast threshold, so the DATA side is not
+    // shuffled by block just to learn its group count. Group
+    // assignment for hot blocks is unchanged and cold blocks get g = 1,
+    // so the emitted pair set is bit-identical to the naive join
+    // (ScaleSpec re-proves it).
+    df.join(hot, Seq(blockCol), "left")
       .withColumn("__g", coalesce(col("__g"), lit(1)))
       .withColumn("__gid", pmod(xxhash64(col(idCol)), col("__g")).cast("int"))
       .withColumn("__q", explode(sequence(lit(0), col("__g") - 1)))

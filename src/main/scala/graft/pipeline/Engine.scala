@@ -115,6 +115,4 @@ final class Engine(spark: SparkSession) {
   }
 
   def activeKeys: Seq[String] = running.keys.toSeq
-
-  def stopAll(): Unit = { running.keys.foreach(deletePipeline); }
 }

@@ -274,8 +274,8 @@ object AsOf {
     *
     * Construction (all composition of tested pieces, long times only):
     *  1. per (rightKeys, wb) keep the last (time, ties) row — one row
-    *     per window, a bounded aggregate (WindowTopKRewrite turns the
-    *     row_number filter into the RowTopK combine when active);
+    *     per window (Spark's window group limit keeps one row per
+    *     window before the shuffle);
     *  2. as-of join the left's DISTINCT (key, wb) set against those
     *     per-window lasts at time wb-1 — the carry per left window;
     *     both inputs hold one row per (key, window), so this inner

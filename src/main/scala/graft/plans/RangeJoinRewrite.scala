@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -245,5 +246,17 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
             }
         }
       }
+  }
+}
+
+/** Opt-in Spark extension: `spark.sql.extensions=graft.plans.GraftOptimizations`
+  * (composes with graft.GraftExtensions via a comma-separated list).
+  * Top-k per group (`Filter(row_number() <= k)` over a Window) needs no
+  * graft rule: Spark's own `InferWindowGroupLimit` adds a per-partition
+  * `WindowGroupLimit` below the window's shuffle. */
+class GraftOptimizations extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectOptimizerRule(_ => RangeJoinRewrite)
+    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
   }
 }

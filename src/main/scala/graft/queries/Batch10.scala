@@ -652,7 +652,7 @@ object Batch10 {
     // via flatMapGroupsWithState — O(k) state per group forever, the
     // streaming-cardinality shape (dropDuplicates-based distinct
     // counting carries every key seen; this carries 64 longs). The
-    // events feed is materialized through the nanos-aware reader and
+    // events feed is materialized through Catalog.events and
     // replayed as ONE micro-batch, where the carried-state fold equals
     // the batch sketch exactly — so the twin shares the batch entry's
     // DuckDB oracle under the full hash compare.

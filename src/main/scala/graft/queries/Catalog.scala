@@ -22,54 +22,12 @@ object Catalog {
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Normalize `events.ts` across testdata generations to ONE type —
-    * TimestampType at µs precision under the UTC session TZ:
-    *  - TIMESTAMP(NANOS) files (early rounds): Spark's vectorized
-    *    reader rejects nanos, so read as a nanos long
-    *    (`nanosAsLong`) and truncate to µs (matching DuckDB's
-    *    `CAST(ts_ns AS TIMESTAMP)` truncation, verified truncating
-    *    not rounding);
-    *  - TIMESTAMP(MICROS) files (round-11 regeneration): arrive as
-    *    TIMESTAMP_NTZ — cast to TimestampType (UTC session TZ makes
-    *    the naive value the same instant), keeping every downstream
-    *    plan and oracle comparison byte-identical to the nanos era. */
-  // Whether $dir/events.parquet is a nanos-era file, probed ONCE per
-  // dir: events() is called by every events-touching catalog entry
-  // (several per bench pass), and paying newSession() + a second
-  // parquet footer read per call doubled the common micros path's
-  // setup cost (r12 review). A fixture REGENERATION changes the file's
-  // era at most from nanos to micros across driver rounds, never
-  // mid-JVM — and a wrong cached verdict fails loudly (PARQUET_TYPE
-  // _ILLEGAL), it cannot corrupt results.
-  private val eventsIsNanos =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    // The nanos probe needs spark.sql.legacy.parquet.nanosAsLong, but
-    // setting it on the CALLER's session is the conf-bleed class the
-    // bloom build already eliminated (r11 finding 3) — so probe (and,
-    // for nanos-era files, read) under a DEDICATED newSession: same
-    // SparkContext and catalog, separate runtime conf. Current-era
-    // (micros) files take the parent-session read below, so the
-    // caller's session is never mutated on any path.
-    val nanos = eventsIsNanos.computeIfAbsent(dir, { d =>
-      val probe = spark.newSession()
-      probe.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      probe.read.parquet(s"$d/events.parquet")
-        .schema("ts").dataType == org.apache.spark.sql.types.LongType
-    })
-    if (nanos) {
-      val reader = spark.newSession()
-      reader.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // nanos-era file: stays bound to the reader session, whose conf
-      // the parquet scan captures (plans compose freely with parent-
-      // session frames — one shared SparkContext)
-      reader.read.parquet(s"$dir/events.parquet")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    } else
-      spark.read.parquet(s"$dir/events.parquet").withColumn("ts",
-        col("ts").cast(org.apache.spark.sql.types.TimestampType))
-  }
+  /** `events` with `ts` as TimestampType: the fixtures store it as
+    * TIMESTAMP(MICROS), which arrives as TIMESTAMP_NTZ; the UTC session
+    * TZ makes the naive value the same instant. */
+  def events(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/events.parquet")
+      .withColumn("ts", col("ts").cast(TimestampType))
 
   /** Shared replay scaffold for the streaming gate entries: copy ONE
     * fixture file into a scratch source dir, stream it through

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Cluster-safe reuse primitives for expensive shared subtrees (the
@@ -107,10 +107,6 @@ object Reuse {
     val d = freshReg.get(site)
     if (d != null) d.unpersist(blocking)
   }
-
-  /** [[cache]] for typed Datasets. */
-  def cacheDs[T](ds: Dataset[T]): Dataset[T] =
-    ds.persist(StorageLevel.MEMORY_AND_DISK)
 
   /** Eager reliable checkpoint: cuts lineage by writing to the
     * checkpoint filesystem (NOT executor-local blocks). */

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupState
 
 /** Streaming-plane helpers: the reference's streaming semantics (S1/S2
   * snapshot-then-tail, CDC materialization, Q10 queued micro-batching)
@@ -45,13 +44,6 @@ object Streaming {
       slide: String, watermark: String, groupCols: Column*): DataFrame =
     df.withWatermark(timeCol, watermark)
       .groupBy(window(col(timeCol), width, slide) +: groupCols: _*)
-      .agg(count(lit(1)).as("n"))
-
-  /** Session window aggregate (gap-based; roadmap "session windows"). */
-  def sessionCounts(df: DataFrame, timeCol: String, gap: String,
-      watermark: String, groupCols: Column*): DataFrame =
-    df.withWatermark(timeCol, watermark)
-      .groupBy(session_window(col(timeCol), gap) +: groupCols: _*)
       .agg(count(lit(1)).as("n"))
 
   /** Deterministic training-mixture sampling (the sample_weighted
@@ -269,16 +261,4 @@ object Streaming {
       f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .foreachBatch(f)
-
-  /** Custom keyed state: running per-key counters via
-    * mapGroupsWithState (roadmap "stateful transformations /
-    * AggregatingState"). Exposed as a reusable primitive. */
-  def runningCountState(count: Long, newRows: Long): Long = count + newRows
-  def countPerKey(key: String, rows: Iterator[org.apache.spark.sql.Row],
-      state: GroupState[Long]): (String, Long) = {
-    val updated = state.getOption.getOrElse(0L) + rows.size
-    state.update(updated)
-    (key, updated)
-  }
-}
+      .foreachBatch(f)}

@@ -12,7 +12,7 @@ import graft.plans.GraftOptimizations
 class RangeJoinRewriteSpec extends SparkTestBase {
 
   // second session sharing the context, with the optimizer rules
-  // injected (TopKRewriteSpec's builder dance)
+  // injected
   private lazy val opt: SparkSession = {
     val prev = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
@@ -350,5 +350,18 @@ class RangeJoinRewriteSpec extends SparkTestBase {
       col("l_x") <= col("r_y") && col("l_x") >= col("r_y") &&
         col("l_t") >= col("r_t") - 10L && col("l_t") < col("r_t"))
     assert(pairs(joined) === pairs(naive))
+  }
+
+  test("row_number top-k entries keep Spark's WindowGroupLimit under the graft rules") {
+    // no graft rule may hide the Window from Spark's InferWindowGroupLimit
+    for (name <- Seq("win_topk_per_day", "ann_knn_join")) {
+      val q = graft.SparkEntry.queries(name)
+      val df = q(opt, sf("sf0.001"))
+      val rows = df.collect().map(_.toString).sorted.toSeq
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("WindowGroupLimit"), s"$name:\n$plan")
+      assert(rows.nonEmpty)
+      assert(rows === q(spark, sf("sf0.001")).collect().map(_.toString).sorted.toSeq, name)
+    }
   }
 }

@@ -348,7 +348,8 @@ class ScaleSpec extends SparkTestBase {
   test("blockedSelfJoinPairs: per-task candidate pairs bounded on the REAL join input") {
     val cap = 32
     val docs = skewedDocs(400) // naive: one key with 400*399/2 = 79,800 pairs
-    val repl = Scale.triangleReplicate(docs, "block", "doc_id", cap, 64)
+    val repl = Scale.triangleReplicate(docs, "block", "doc_id",
+      Scale.hotBlocks(docs, "block", cap, 64).get)
     // the join key is (block, __lo, __hi); a reducer's candidate count
     // for a key is sideA(key) x sideB(key) = n(key)^2 for a self-join
     val worst = repl.groupBy($"block", $"__lo", $"__hi")
@@ -372,7 +373,8 @@ class ScaleSpec extends SparkTestBase {
     val docs = graft.queries.Batch3.shingleDocs(spark, dir)
     val inv = graft.queries.Batch3.shingleInv(docs, None)
     val cap = 1024 // blockedSelfJoinPairs' default, what minePairCounts uses
-    val repl = Scale.triangleReplicate(inv, "shash", "doc_id", cap, 64)
+    val repl = Scale.triangleReplicate(inv, "shash", "doc_id",
+      Scale.hotBlocks(inv, "shash", cap, 64).get)
     val perTask = repl.groupBy($"shash", $"__lo", $"__hi")
       .agg(count(lit(1)).as("n"))
     val worst = perTask.agg(max($"n" * $"n")).collect()(0).getLong(0)

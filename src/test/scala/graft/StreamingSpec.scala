@@ -131,17 +131,10 @@ class StreamingSpec extends SparkTestBase {
     val dir = tmp()
     Files.copy(Paths.get(sf("sf0.001"), "events.parquet"),
       Paths.get(dir, "events.parquet"))
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val raw = spark.readStream.schema(schema).parquet(dir)
-    // same two-generation ts normalization as Catalog.events
-    val stream = schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-    }
+    // same ts normalization as Catalog.events
+    val stream = spark.readStream.schema(schema).parquet(dir)
+      .withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
     (stream, dir)
   }
 
@@ -360,21 +353,12 @@ class StreamingSpec extends SparkTestBase {
     q.processAllAvailable()
     // phase 2: a far-future sentinel event pushes the global watermark
     // past every real session so append mode finalizes them all
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
-    // sentinel ts computed in the file's own ts domain (nanos long for
-    // the early-generation fixtures, µs timestamp for the round-11
-    // regeneration) so the appended file's schema matches the stream's
-    val sentinel = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        val maxNs = raw.agg(max("ts")).head().getLong(0)
-        raw.limit(1).withColumn("ts", lit(maxNs + 86400L * 1000000000L))
-      case _ =>
-        val maxTs = raw.agg(max("ts")).head().getAs[java.time.LocalDateTime](0)
-        raw.limit(1).withColumn("ts",
-          lit(maxTs.plusDays(1)).cast(raw.schema("ts").dataType))
-    }
-    sentinel
+    // sentinel ts in the file's own ts type (TIMESTAMP_NTZ) so the
+    // appended file's schema matches the stream's
+    val maxTs = raw.agg(max("ts")).head().getAs[java.time.LocalDateTime](0)
+    raw.limit(1)
+      .withColumn("ts", lit(maxTs.plusDays(1)).cast(raw.schema("ts").dataType))
       .withColumn("user_id", lit(-1L)) // real user_ids are non-negative
       .write.mode("append").parquet(dir)
     q.processAllAvailable(); q.stop()
