@@ -10,9 +10,7 @@ package graft.kv
   * `KvEngine.execute` batch per flush means one memtable batch (one
   * step towards the next compaction) per flush instead of one per HTTP
   * request — the same amortization rqlite's queue buys over Raft
-  * proposals, and the same
-  * micro-batch semantics as [[graft.streaming.Streaming.queuedWrites]]
-  * (there the batchId plays the sequence_number role).
+  * proposals.
   *
   * Failure semantics: a failing flush is retried `maxRetries` times;
   * if it still fails the batch is dropped (the reference's queue is

@@ -792,10 +792,10 @@ object Ann {
     * the bounded cut — fine at catalog/IVF-typical k (the rows never
     * shuffle; the aggregate eats them map-side), but at
     * SemDeDup-scale k (~2^20) that stage is the non-starter. Callers
-    * holding a [[HierIvf]] should go through [[knnJoinAuto]], which
-    * routes to [[knnJoinIvfHier]]'s two-level ranking past the same
-    * k threshold [[buildIvfAuto]] switches fits at — this flat
-    * entrypoint is for indexes that are flat by construction. */
+    * holding a [[HierIvf]] past the k threshold [[buildIvfAuto]]
+    * switches fits at should use [[knnJoinIvfHier]]'s two-level
+    * ranking — this flat entrypoint is for indexes that are flat by
+    * construction. */
   def knnJoinIvf(index: IvfIndex, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qEmbCol: String,
       topK: Int, nprobe: Int, excludeSelf: Boolean = false): DataFrame =
@@ -814,31 +814,6 @@ object Ann {
       maxCenterBroadcastBytes: Long = 256L << 20): DataFrame =
     knnJoin(TwoLevel(h, nprobeCoarse, maxCenterBroadcastBytes), embCol, idCol,
       queries, qIdCol, qEmbCol, topK, nprobe, excludeSelf)
-
-  /** Routed batched k-NN join — THE entrypoint when the index came
-    * from [[buildIvfAuto]] / [[buildIvfHierarchical]]: picks the flat
-    * ranking while k is small enough that |Q|·k map-side cosine rows
-    * are cheap, and the two-level ranking past `hierThreshold` (same
-    * default as [[buildIvfAuto]], so an index that NEEDED the
-    * hierarchical fit is automatically probed hierarchically — a
-    * caller can no longer pay the flat |Q|·2^20 ranking by accident).
-    * `nprobeCoarse` ≤ 0 derives a coarse probe width that keeps at
-    * least `nprobe` sub-clusters reachable (ceil(nprobe/k2)+1, capped
-    * at k1). Exhaustive settings remain exact through either route. */
-  def knnJoinAuto(h: HierIvf, embCol: String, idCol: String,
-      queries: DataFrame, qIdCol: String, qEmbCol: String,
-      topK: Int, nprobe: Int, nprobeCoarse: Int = 0,
-      excludeSelf: Boolean = false, hierThreshold: Int = 4096,
-      maxCenterBroadcastBytes: Long = 256L << 20): DataFrame = {
-    val ranking =
-      if (h.index.centers.length <= hierThreshold) Flat(h.index)
-      else TwoLevel(h,
-        if (nprobeCoarse > 0) nprobeCoarse
-        else math.min(h.k1, math.ceil(nprobe.toDouble / math.max(1, h.k2)).toInt + 1),
-        maxCenterBroadcastBytes)
-    knnJoin(ranking, embCol, idCol, queries, qIdCol, qEmbCol, topK, nprobe,
-      excludeSelf)
-  }
 
   /** The one join body: the batched probe ranking, then the scoring
     * tail — equi-join the (query, probed cluster) pairs with the
@@ -937,9 +912,9 @@ object Ann {
     tuneFrontier(Flat(index), index.centers.length, None, embCol, idCol,
       queries, qIdCol, qVecCol, topK, targets, maxSample)
 
-  /** [[tuneNprobe]] for hierarchical indexes at SemDeDup-scale k,
-    * where the flat tuner's exhaustive-reference join (|Q|·k ranking
-    * rows) is exactly the stage the hierarchy exists to avoid.
+  /** [[tuneNprobeFrontier]] for hierarchical indexes at SemDeDup-scale
+    * k, where the flat tuner's exhaustive-reference join (|Q|·k
+    * ranking rows) is exactly the stage the hierarchy exists to avoid.
     *
     * The coarse cut is FIXED at `nprobeCoarse` and only `nprobe` is
     * tuned within it: with the cell set pinned, the probed-cluster
@@ -947,28 +922,12 @@ object Ann {
     * grows superset-wise — recall is monotone and the binary search
     * valid. (Tuning both knobs at once breaks monotonicity: growing
     * nprobe can swap the coarse cut's cluster ranking pool.) The
-    * recall reference is TRUE exact — nprobeCoarse=k1, nprobe=k — so
-    * if even the full fixed cut misses the target, the tuner returns
-    * (nprobeCoarse·k2, that recall): the caller's signal to raise
+    * recall reference is TRUE exact — nprobeCoarse=k1, nprobe=k — and
+    * builds once for all targets; recall measurements memoize by
+    * nprobe across the per-target searches. Per target: the smallest
+    * nprobe meeting it, or, if even the full fixed cut misses it,
+    * (cutMax, recall(cutMax)) — the caller's signal to raise
     * `nprobeCoarse`, the knob this tuner deliberately doesn't touch. */
-  def tuneNprobeHier(h: HierIvf, embCol: String, idCol: String,
-      queries: DataFrame, qIdCol: String, qVecCol: String,
-      nprobeCoarse: Int, topK: Int = 20, targetRecall: Double = 0.9,
-      maxSample: Int = 200): (Int, Double) = {
-    val Seq((_, np, rec)) = tuneNprobeHierFrontier(h, embCol, idCol,
-      queries, qIdCol, qVecCol, nprobeCoarse, topK, Seq(targetRecall),
-      maxSample)
-    (np, rec)
-  }
-
-  /** [[tuneNprobeHier]] for a whole frontier of targets in one pass —
-    * the hier twin of [[tuneNprobeFrontier]]: the TRUE-exact reference
-    * (full coarse cut, all clusters) builds once and recall
-    * measurements memoize by nprobe across the per-target searches.
-    * Per target the hier tuner's contract is preserved exactly: if
-    * even the full fixed cut misses the target, return
-    * (cutMax, recall(cutMax)) — the documented raise-nprobeCoarse
-    * signal — else the smallest nprobe meeting it. */
   def tuneNprobeHierFrontier(h: HierIvf, embCol: String, idCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String,
       nprobeCoarse: Int, topK: Int, targets: Seq[Double],
@@ -1187,41 +1146,6 @@ object Ann {
     } finally fs.delete(marker, false)
   }
 
-  /** Streaming flavor of [[appendToIvf]]: a stream of new vectors
-    * assigned with the frozen centers (flat or two-pass, per the index
-    * shape) and appended per micro-batch. Deliberately `foreachBatch` + batch append rather than the
-    * streaming parquet sink: the streaming sink would plant a
-    * `_spark_metadata` commit log in the index directory, after which
-    * readers of the directory see ONLY the sink's files and the
-    * original index silently vanishes (the snapshotThenTail caveat).
-    *
-    * Idempotence under at-least-once retries: an applied-batchId
-    * marker (`_applied_batches/<runToken>/<batchId>`, outside the
-    * `assigned` read path) is checked inside the foreachBatch — a
-    * retried micro-batch whose append already committed is skipped
-    * instead of double-appending rows that would distort every later
-    * top-k. The marker commits AFTER the parquet append, so the
-    * remaining at-least-once window is a crash BETWEEN append and
-    * marker write (the same window any non-transactional sink has);
-    * callers needing exact-once under that window dedup on an id
-    * column at read time.
-    *
-    * `runToken` SCOPES the markers: batchIds restart at 0 for any
-    * query started on a fresh (or default temp) checkpoint, so
-    * batchId-only markers would make a SECOND run against the same
-    * index path silently skip all its data — at-least-once would
-    * become at-most-once across runs. The default (empty) token
-    * generates a fresh UUID per writer, which dedups retries WITHIN
-    * the run and never collides across runs; callers who restart from
-    * a durable checkpoint and want retry-dedup across JVM restarts
-    * pass the same token they pair with that checkpoint. Caller
-    * starts the writer. */
-  def appendToIvfStream(ix: IvfShape, stream: DataFrame, embCol: String,
-      path: String, runToken: String = ""): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    idempotentForeachBatch(stream, path, runToken) { batch =>
-      appendToIvf(ix, batch, embCol, path)
-    }
-
   /** The opt-in token that makes [[onceBatch]] honor pre-runToken
     * flat-layout markers (`_applied_batches/<batchId>`). Pass it as
     * `runToken` ONLY when resuming the single pre-upgrade run that
@@ -1287,11 +1211,35 @@ object Ann {
     }
   }
 
-  /** The idempotent foreachBatch shell shared by every streaming sink
-    * here (flat/hier index appends, the streaming k-NN join, the gate
-    * replay scaffold): per-writer run token (UUID unless the caller
-    * pairs one with a durable checkpoint — see [[appendToIvfStream]])
-    * + [[onceBatch]] marker guard around the caller's per-batch body. */
+  /** The idempotent foreachBatch shell for streaming sinks: the
+    * [[onceBatch]] marker guard around the caller's per-batch body
+    * (an [[appendToIvf]] or a [[knnJoinIvf]] append; the streaming
+    * gate entries replay through it). Deliberately `foreachBatch` +
+    * batch append rather than the streaming parquet sink: the
+    * streaming sink would plant a `_spark_metadata` commit log in the
+    * target directory, after which readers of the directory see ONLY
+    * the sink's files and an index's original rows silently vanish.
+    *
+    * Idempotence under at-least-once retries: an applied-batchId
+    * marker (`_applied_batches/<runToken>/<batchId>`, outside the
+    * data's read path) is checked inside the foreachBatch — a retried
+    * micro-batch whose append already committed is skipped instead of
+    * double-appending rows that would distort every later top-k. The
+    * marker commits AFTER the body, so the remaining at-least-once
+    * window is a crash BETWEEN append and marker write (the same
+    * window any non-transactional sink has); callers needing
+    * exact-once under that window dedup on an id column at read time.
+    *
+    * `runToken` SCOPES the markers: batchIds restart at 0 for any
+    * query started on a fresh (or default temp) checkpoint, so
+    * batchId-only markers would make a SECOND run against the same
+    * path silently skip all its data — at-least-once would become
+    * at-most-once across runs. The empty token generates a fresh UUID
+    * per writer, which dedups retries WITHIN the run and never
+    * collides across runs; callers who restart from a durable
+    * checkpoint and want retry-dedup across JVM restarts pass the
+    * same token they pair with that checkpoint. Caller starts the
+    * writer. */
   def idempotentForeachBatch(stream: DataFrame, path: String,
       runToken: String)(body: DataFrame => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val token =
@@ -1304,8 +1252,9 @@ object Ann {
     }
   }
 
-  /** The per-micro-batch body of [[appendToIvfStream]], exposed so the
-    * retry semantics are directly testable: append unless this
+  /** One idempotent [[appendToIvf]] micro-batch, the body
+    * [[idempotentForeachBatch]] runs for a streamed append, exposed so
+    * the retry semantics are directly testable: append unless this
     * (runToken, batchId) marker already exists. Returns true if the
     * batch was appended, false if it was recognized as an
     * already-applied retry. */
@@ -1570,28 +1519,5 @@ object Ann {
     val m = spark.read.parquet(s"$path/hier_meta").head()
     HierIvf(index, coarse, m.getInt(0), m.getInt(1), m.getLong(2),
       m.getLong(3))
-  }
-
-  /** Persist a PQ codebook beside an index (m·|codebook|·dsub floats —
-    * a tiny sidecar like the IVF centers). [[persistIvf]] already
-    * carries the `pqcode` column through `partitionBy(cluster)`, so
-    * persistIvf + persistPq is the complete build-once artifact. */
-  def persistPq(codebook: PqCodebook, spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    codebook.centers.toIndexedSeq.zipWithIndex.flatMap { case (subCenters, sub) =>
-      subCenters.toIndexedSeq.zipWithIndex.map { case (c, ci) =>
-        (sub, ci, c.toIndexedSeq)
-      }
-    }.toDF("sub", "centroid", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/pq_codebook")
-  }
-
-  def loadPq(spark: SparkSession, path: String): PqCodebook = {
-    val rows = spark.read.parquet(s"$path/pq_codebook")
-      .orderBy("sub", "centroid").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](2).toArray))
-    val m = rows.map(_._1).max + 1
-    val centers = Array.tabulate(m)(sub => rows.filter(_._1 == sub).map(_._2))
-    PqCodebook(m, centers)
   }
 }

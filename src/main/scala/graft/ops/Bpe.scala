@@ -58,19 +58,6 @@ object Bpe {
     * detokenization exact on any corpus, markup included. */
   val EndOfWord = " "
 
-  /** Id 0 of every vocabulary: the unknown-symbol token. A character
-    * never seen at FIT time has no learned id; mapping it to a
-    * reserved unk id (instead of dropping or crashing) is what every
-    * production tokenizer does with out-of-charset bytes. The INTERIOR
-    * space makes it unforgeable (r12 review, same argument as
-    * [[EndOfWord]]): merged symbols are concatenations of word
-    * characters (never whitespace) with at most one trailing sentinel
-    * space, so no learned symbol can ever contain a mid-string space —
-    * while a plain "<unk>" could be fused verbatim from an
-    * ML-preprocessed corpus that contains the literal string and
-    * would collide with reserved id 0. */
-  val UnkToken = "<unk >"
-
   /** A learned model: merge list in rank order (rank = learning
     * order; lower merges first at encode time), the fit-time
     * character set (the vocabulary's base alphabet), plus fit
@@ -82,23 +69,6 @@ object Bpe {
     /** rank lookup the encoder broadcasts: (left, right) -> rank */
     lazy val ranks: Map[(String, String), Int] =
       merges.zipWithIndex.toMap
-
-    /** Deterministic token-id vocabulary: id 0 = [[UnkToken]], then
-      * the sorted fit-time base alphabet (+ sentinel), then the
-      * merged symbols in rank order — a pure function of the model,
-      * so any two loads of the same artifact agree. Downstream
-      * packing/batching consumes these ids, not strings. */
-    lazy val vocab: Map[String, Int] = {
-      val base = (baseChars.toSet + EndOfWord).toSeq.sorted
-      val mergedSyms = merges.map { case (l, r) => l + r }
-      // distinct: two merges can produce the SAME symbol string
-      // (("a","bc") and ("ab","c") both yield "abc"); without dedup
-      // zipWithIndex.toMap keeps only the last id and the id space
-      // goes non-dense — an embedding table sized by vocab.size would
-      // be smaller than max(id)+1 (r12 review). First occurrence wins,
-      // ids stay dense 0..size-1.
-      (UnkToken +: (base ++ mergedSyms)).distinct.zipWithIndex.toMap
-    }
   }
 
   private def splitWords(text: String): Iterator[String] =
@@ -298,30 +268,6 @@ object Bpe {
           (id, splitWords(text).flatMap(memo.encode).toArray)
         }
       }.toDF(idCol, "tokens")
-  }
-
-  /** Distributed encode to token IDS: (id, token_ids) per document —
-    * what packing/batching actually consumes. Symbols outside the
-    * fit-time vocabulary (unseen characters) map to [[UnkToken]]'s
-    * id 0. Same partition-local broadcast-memo shape as
-    * [[encodeDocs]]. */
-  def encodeDocIds(docs: DataFrame, idCol: String, textCol: String,
-      model: BpeModel): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val bcRanks = spark.sparkContext.broadcast(model.ranks)
-    val bcVocab = spark.sparkContext.broadcast(model.vocab)
-    docs.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        val memo = new Memo(bcRanks.value, MemoCap)
-        val vocab = bcVocab.value
-        it.map { case (id, text) =>
-          (id, splitWords(text)
-            .flatMap(w => memo.encode(w).iterator.map(vocab.getOrElse(_, 0)))
-            .toArray)
-        }
-      }.toDF(idCol, "token_ids")
   }
 
   /** Distributed token count per document — the budgeting/packing

@@ -511,80 +511,6 @@ object Multimodal {
       .mapPartitions(_.map { case (id, bytes) => decodeAudioExact(id, bytes) })
   }
 
-  /** One fixed-duration analysis window of a decoded clip: the audio
-    * analogue of a sampled video frame (real decode, row explosion). */
-  final case class AudioWindow(
-      media_id: Long, window_no: Int, start_frame: Long, n_frames: Long,
-      rms: Float, peak: Float, zcr: Float)
-
-  /** Bound on windows emitted per clip (r12 review: the window buffer
-    * must materialize before the stream closes, so its size — not just
-    * the chunk size — is the per-row memory ceiling; 64k windows ≈ a
-    * few MB, and `windowFrames * MaxAudioWindows` frames of audio is
-    * hours at any practical window). */
-  private val MaxAudioWindows = 1 << 16
-
-  /** REAL windowed audio features: the shared [[withPcmSamples]] core,
-    * one row per `windowFrames`-sized window with its RMS / peak /
-    * zero-crossing rate — the feature-extraction shape a speech/audio
-    * training pipeline feeds into segment filtering. Undecodable bytes
-    * yield zero rows (the explode-to-nothing convention `sampleFrames`
-    * documents for dirty corpora). One chunked pass; per-row memory is
-    * bounded by [[MaxAudioWindows]] window rows + one chunk. */
-  def decodeAudioWindows(id: Long, bytes: Array[Byte],
-      windowFrames: Int): Iterator[AudioWindow] = {
-    require(windowFrames > 0, "decodeAudioWindows: windowFrames must be positive")
-    val b = if (bytes == null) Array.emptyByteArray else bytes
-    val frameCap = math.min(MaxDecodeFrames,
-      windowFrames.toLong * MaxAudioWindows)
-    withPcmSamples(b, frameCap) { (_, _, samples) =>
-      val out = scala.collection.mutable.ArrayBuffer.empty[AudioWindow]
-      var frames = 0L
-      var winNo = 0
-      var winStart = 0L
-      var winN = 0L
-      var sumSq, peak = 0.0
-      var crossings = 0L
-      var prevSign = 0
-      def flush(): Unit = if (winN > 0) {
-        out += AudioWindow(id, winNo, winStart, winN,
-          math.sqrt(sumSq / winN).toFloat, peak.toFloat,
-          (crossings.toDouble / winN).toFloat)
-        winNo += 1
-        winStart = frames
-        winN = 0; sumSq = 0.0; peak = 0.0; crossings = 0L
-        // prevSign carries across the boundary: a crossing between the
-        // last sample of one window and the first of the next is real
-      }
-      while (samples.hasNext) {
-        val s = samples.next()
-        sumSq += s * s
-        val as = math.abs(s)
-        if (as > peak) peak = as
-        val sign = if (s > 0) 1 else if (s < 0) -1 else 0
-        if (sign != 0) {
-          if (prevSign != 0 && sign != prevSign) crossings += 1
-          prevSign = sign
-        }
-        winN += 1
-        frames += 1
-        if (winN == windowFrames) flush()
-      }
-      flush() // tail window (shorter than windowFrames)
-      out.iterator
-    }.getOrElse(Iterator.empty)
-  }
-
-  /** Batched windowed audio features: partition-local `flatMap` — the
-    * row-explosion shape of [[sampleFrames]], but REAL. */
-  def audioWindows(df: DataFrame, windowFrames: Int): Dataset[AudioWindow] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("media_id").cast("long"), col("media").cast("binary"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) => decodeAudioWindows(id, bytes, windowFrames) }
-  }
-
   /** Real resampled audio row: re-encoded 16-bit mono WAV bytes at the
     * target rate. `resampled=false` means the bytes were not decodable
     * (original bytes pass through untouched); decodable clips always
@@ -844,19 +770,6 @@ object Multimodal {
     out.toByteArray
   }
 
-  /** Batched feature extraction over (media_id, media) rows. Runs
-    * partition-local with no shuffle; input partitioning is preserved.
-    * The iterator never materializes a partition in memory. */
-  def extractFeatures(df: DataFrame): Dataset[MediaFeature] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col("media_id").cast("long"), col("media").cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        decodeImageStub(id, if (bytes == null) Array.emptyByteArray else bytes)
-      })
-  }
-
   /** Real resized image row: re-encoded PNG bytes + output dims.
     * `resized=false` means the bytes were NOT decodable (original
     * bytes pass through untouched). Decodable images always carry
@@ -1101,8 +1014,8 @@ object Multimodal {
       media_id: Long, frame_no: Int, byte_offset: Int, n_bytes: Int,
       decoded: Boolean, width: Int, height: Int, feature: Array[Float])
 
-  /** Bound on frames scanned per clip — the video analogue of
-    * [[MaxAudioWindows]] (64k frames ≈ 36 min at 30 fps). */
+  /** Bound on frames scanned per clip (64k frames ≈ 36 min at
+    * 30 fps). */
   private val MaxVideoFrames = 1 << 16
 
   /** JPEG frame boundaries inside an MJPEG byte stream. MJPEG — the

@@ -280,16 +280,6 @@ object Scale {
     (l2, r2)
   }
 
-  /** Persist a DataFrame bucketed by `key` as a managed table (the
-    * co-location primitive: two tables bucketed the same way join
-    * without any Exchange). */
-  def writeBucketed(df: DataFrame, key: String, numBuckets: Int,
-      tableName: String): Unit =
-    df.write.mode("overwrite")
-      .bucketBy(numBuckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(tableName)
-
   /** Build a Bloom filter over `dim`'s join keys — the SEMI-JOIN
     * PUSHDOWN artifact for a 100-TB fact scan: a fact⋈dim join where
     * the dim side keeps few keys still shuffles EVERY fact row before
@@ -387,41 +377,4 @@ object Scale {
   def loadBloom(spark: org.apache.spark.sql.SparkSession,
       path: String): Array[Byte] =
     spark.read.parquet(path).head().getAs[Array[Byte]]("bloom")
-
-  /** 16-bit Morton interleave of two 8-bit dimensions as a SQL
-    * expression string (pure shift/mask arithmetic — stays in
-    * whole-stage codegen; same formula the zorder_key oracle runs in
-    * DuckDB). Inputs must already be reduced to 0..255. */
-  def zorderExpr(xCol: String, yCol: String): String = {
-    def spread(v: String): String = {
-      val a = s"(($v | shiftleft($v, 4)) & 3855)"
-      val b = s"(($a | shiftleft($a, 2)) & 13107)"
-      s"(($b | shiftleft($b, 1)) & 21845)"
-    }
-    s"${spread(xCol)} | shiftleft(${spread(yCol)}, 1)"
-  }
-
-  /** The LAYOUT lever for two-dimensional predicates: write the data
-    * range-partitioned + sorted by the Morton key of (xBucket,
-    * yBucket). Locality in z-order is locality in BOTH dimensions, so
-    * every parquet row group's min/max footer stats span a narrow
-    * range of x AND of y — a reader filtering on either dimension
-    * (or both) skips most row groups/files. A plain sort by x gives
-    * this only for x. `repartitionByRange` on the key makes the
-    * per-file key ranges disjoint, so file-level pruning composes
-    * with row-group pruning. ZOrderSpec proves the stats tighten
-    * against footer metadata, not just by claim. */
-  def writeZOrdered(df: DataFrame, xBucket: Column, yBucket: Column,
-      path: String, numFiles: Int = 8): Unit = {
-    val keyed = df.withColumn("__zx", xBucket.cast("long"))
-      .withColumn("__zy", yBucket.cast("long"))
-      .withColumn("__zkey", expr(zorderExpr("__zx", "__zy")))
-    // the key orders the write and then leaves: the produced dataset
-    // keeps the CALLER's schema exactly (the layout lives in the file
-    // boundaries + footer stats, not in an extra column)
-    keyed.repartitionByRange(numFiles, col("__zkey"))
-      .sortWithinPartitions("__zkey")
-      .drop("__zx", "__zy", "__zkey")
-      .write.mode("overwrite").parquet(path)
-  }
 }

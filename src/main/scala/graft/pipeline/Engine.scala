@@ -113,6 +113,4 @@ final class Engine(spark: SparkSession) {
       else { runBatch(spec); spec.source.key }
     }
   }
-
-  def activeKeys: Seq[String] = running.keys.toSeq
 }

@@ -213,11 +213,17 @@ final class HttpService(
               val results = kv.execute(parsed.collect { case Right(s) => s })
               val root = mapper.createObjectNode()
               val arr = root.putArray("results")
+              // a failed statement reports its error alone, as the
+              // reference does: no rows_affected for a write that
+              // never happened
               results.foreach { r =>
                 val n = arr.addObject()
-                n.put("last_insert_id", r.lastInsertId)
-                n.put("rows_affected", r.rowsAffected)
-                r.error.foreach(n.put("error", _))
+                r.error match {
+                  case Some(err) => n.put("error", err)
+                  case None =>
+                    n.put("last_insert_id", r.lastInsertId)
+                    n.put("rows_affected", r.rowsAffected)
+                }
               }
               sendJson(ex, 200, mapper.writeValueAsString(root))
             }

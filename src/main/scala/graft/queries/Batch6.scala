@@ -26,8 +26,8 @@ object Batch6 {
     // slide produces the expansion inside codegen; the oracle unnests
     // the two bucket starts per event. time_bucket's 2000-01-01 origin
     // coincides with Spark's epoch alignment for any slide that
-    // divides a day. The streaming twin is Streaming.slidingCounts —
-    // StreamingSpec replays this through a real stream and matches.
+    // divides a day. StreamingSpec replays this through a real stream
+    // and matches.
     "stream_sliding" -> Q(
       (s, dir) => {
         events(s, dir)

@@ -13,7 +13,9 @@ import graft.model.{EndpointConfig, Schemas}
   * MongoDB CDC (S1/S2) is modeled as a CDC-envelope feed: any
   * file/kafka stream of change-event JSON with the [[Schemas.cdc]]
   * shape. `load_initial_data=true` (mongo.go:71-76) maps to
-  * snapshot-then-tail: a batch read unioned ahead of the stream.
+  * reading the feed from its start: kafka begins at `earliest`, and
+  * a file-backed feed reads its existing files as the first
+  * micro-batch before the tail.
   */
 object Sources {
   type BatchSource = (SparkSession, EndpointConfig) => DataFrame

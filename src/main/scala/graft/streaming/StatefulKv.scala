@@ -48,33 +48,4 @@ object StatefulKv {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout)(applyOps)
   }
-
-  /** TTL flavor of [[applyOps]] (the ref roadmap's state TTL —
-    * docs/COMPREHENSIVE_ENGINEERING_ROADMAP.md:73): every write re-arms
-    * a processing-time timer; when it fires (a later micro-batch runs
-    * with no ops for the key after `ttlMs`), the state is dropped and
-    * an expiry retraction (exists=false) is emitted. Without TTL, cold
-    * keys pin state-store memory forever — at 100 TB of key
-    * cardinality, eviction is what keeps executors alive. */
-  def applyOpsTtl(ttlMs: Long)(key: String, ops: Iterator[KvOp],
-      state: GroupState[String]): Iterator[KvUpdate] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      Iterator.single(KvUpdate(key, null, exists = false))
-    } else {
-      val out = applyOps(key, ops, state)
-      if (state.exists) state.setTimeoutDuration(ttlMs)
-      out
-    }
-  }
-
-  /** [[materialize]] with per-key state TTL: keys idle past `ttlMs`
-    * expire (state removed, retraction emitted) at the next batch. */
-  def materializeWithTtl(spark: SparkSession, ops: Dataset[KvOp],
-      ttlMs: Long): Dataset[KvUpdate] = {
-    import spark.implicits._
-    ops.groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.ProcessingTimeTimeout)(applyOpsTtl(ttlMs))
-  }
 }

@@ -1,50 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Streaming-plane helpers: the reference's streaming semantics (S1/S2
-  * snapshot-then-tail, CDC materialization, Q10 queued micro-batching)
-  * plus the roadmap features (windows, watermarks, session state —
-  * ROADMAP.md:95-106) that are Spark built-ins.
+/** Streaming-plane helpers: the streaming twins of catalog operators
+  * (mixture sampling, sequence packing, budget selection, KMV
+  * sketches). Windows, watermarks and CDC dedup are Spark built-ins
+  * the catalog entries call directly.
   */
 object Streaming {
-
-  /** S2: bootstrap-then-tail — a batch snapshot unioned ahead of the
-    * stream (mongo.go:146-204's LoadInitialData + Read). With Spark the
-    * union is a single plan; exactly-once dedup across the seam comes
-    * from the id column.
-    *
-    * Caveat when the sink is a file sink: batch-appending the snapshot
-    * into the streaming sink directory leaves it outside the sink's
-    * `_spark_metadata` commit log, so later reads of the sink root
-    * won't see it. Bootstrap by placing snapshot files in the stream
-    * SOURCE directory (the file source picks them up as batch 0)
-    * rather than writing to the sink out-of-band. */
-  def snapshotThenTail(snapshot: DataFrame, tail: DataFrame): DataFrame =
-    snapshot.unionByName(tail, allowMissingColumns = true)
-
-  /** S1: streaming latest-per-key CDC materialization with a watermark
-    * bound on state. */
-  def cdcLatest(df: DataFrame, keyCol: String, timeCol: String,
-      watermark: String = "10 minutes"): DataFrame =
-    df.withWatermark(timeCol, watermark)
-      .dropDuplicatesWithinWatermark(keyCol)
-
-  /** Tumbling window aggregate with watermark (roadmap "tumbling
-    * windows + watermarks"). */
-  def tumblingCounts(df: DataFrame, timeCol: String, width: String,
-      watermark: String, groupCols: Column*): DataFrame =
-    df.withWatermark(timeCol, watermark)
-      .groupBy(window(col(timeCol), width) +: groupCols: _*)
-      .agg(count(lit(1)).as("n"))
-
-  /** Sliding window aggregate. */
-  def slidingCounts(df: DataFrame, timeCol: String, width: String,
-      slide: String, watermark: String, groupCols: Column*): DataFrame =
-    df.withWatermark(timeCol, watermark)
-      .groupBy(window(col(timeCol), width, slide) +: groupCols: _*)
-      .agg(count(lit(1)).as("n"))
 
   /** Deterministic training-mixture sampling (the sample_weighted
     * catalog operator), usable VERBATIM on batch or streaming frames:
@@ -88,9 +52,8 @@ object Streaming {
     * Bootstrap note: `mapGroups`-family operators materialize each
     * key's micro-batch slice, so do NOT replay a 100-TB corpus through
     * the stream as one giant batch 0 — run the BATCH operator over the
-    * snapshot and stream only the incremental tail (the
-    * [[snapshotThenTail]] pattern), seeding state implicitly via the
-    * carried offsets. */
+    * snapshot and stream only the incremental tail, seeding state
+    * implicitly via the carried offsets. */
   def packSequencesStream(df: DataFrame, budget: Long = 512L,
       shards: Int = 8): DataFrame = {
     val spark = df.sparkSession
@@ -229,36 +192,4 @@ object Streaming {
       }
       .toDF("event_type", "n_min", "kth_flipped", "est_users")
   }
-
-  /** Streaming batched ANN k-NN join — the online-lookup/online-dedup
-    * service shape: query vectors STREAM, the IVF index is the frozen
-    * build-once artifact, and each micro-batch routes through
-    * [[graft.ops.Ann.knnJoinIvf]] (per-query cluster probes via
-    * equi-join, bounded top-k both sides — never a corpus scan per
-    * query). Results append to `outPath/results` under the
-    * run-scoped applied-batch marker discipline
-    * ([[graft.ops.Ann.onceBatch]] — see [[graft.ops.Ann
-    * .appendToIvfStream]] for the runToken semantics), so
-    * at-least-once retries cannot duplicate result rows and a fresh
-    * run never collides with old markers. Caller starts the writer;
-    * compose with appendToIvfStream on the same index path for the
-    * full online index-serve + index-grow pair. */
-  def knnJoinIvfStream(index: graft.ops.Ann.IvfIndex, embCol: String,
-      idCol: String, queryStream: DataFrame, qIdCol: String,
-      qEmbCol: String, topK: Int, nprobe: Int,
-      excludeSelf: Boolean = false, outPath: String,
-      runToken: String = ""): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    graft.ops.Ann.idempotentForeachBatch(queryStream, outPath, runToken) { batch =>
-      graft.ops.Ann.knnJoinIvf(index, embCol, idCol, batch,
-          qIdCol, qEmbCol, topK, nprobe, excludeSelf)
-        .write.mode("append").parquet(s"$outPath/results")
-    }
-
-  /** Q10 queued-writes semantics: micro-batch the stream through a
-    * user function; the batchId is the reference's `sequence_number`
-    * (service.go:1106-1159). Caller starts the returned writer. */
-  def queuedWrites(df: DataFrame, triggerMs: Long)(
-      f: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerMs))
-      .foreachBatch(f)}
+}

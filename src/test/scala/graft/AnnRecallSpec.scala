@@ -99,30 +99,6 @@ class AnnRecallSpec extends SparkTestBase {
     recallOn("sf0.1")
   }
 
-  test("tuneNprobeHier: tunes nprobe within a fixed coarse cut; full-cut miss signals raise-nprobeCoarse") {
-    val emb = spark.read.parquet(sf("sf0.01") + "/embeddings.parquet")
-    val h = Ann.buildIvfHierarchical(emb, "embedding", k = K)
-    // exhaustive coarse cut: the tuner must find a pruned nprobe meeting
-    // the floor (the fixture needs ~3/4 of k — see the panel tests)
-    val (np, rec) = Ann.tuneNprobeHier(h, "embedding", "vec_id",
-      emb, "vec_id", "embedding", nprobeCoarse = h.k1, topK = TOPK,
-      targetRecall = FLOOR, maxSample = 100)
-    info(f"tuneNprobeHier(coarse=${h.k1}) chose nprobe=$np recall $rec%.3f")
-    assert(rec >= FLOOR && np >= 1 && np <= K)
-    // a STARVED coarse cut (k1-1 cells) on this near-isotropic fixture
-    // cannot reach the floor at any nprobe within the cut — the tuner
-    // must return the FULL cut with its honest sub-floor recall, the
-    // documented raise-nprobeCoarse signal, not a silent success
-    val starvedCoarse = h.k1 - 1
-    val cutMax = math.min(K, starvedCoarse * h.k2)
-    val (npS, recS) = Ann.tuneNprobeHier(h, "embedding", "vec_id",
-      emb, "vec_id", "embedding", nprobeCoarse = starvedCoarse, topK = TOPK,
-      targetRecall = FLOOR, maxSample = 100)
-    info(f"tuneNprobeHier(coarse=$starvedCoarse) -> nprobe=$npS recall $recS%.3f")
-    if (recS < FLOOR) assert(npS === cutMax)
-    else assert(npS <= cutMax)
-  }
-
   test("tuneNprobe: minimal nprobe meeting the target, measured not guessed") {
     val emb = spark.read.parquet(sf("sf0.01") + "/embeddings.parquet")
     val idx = Ann.buildIvf(emb, "embedding", k = K)

@@ -323,31 +323,6 @@ class AnnSpec extends SparkTestBase {
     assert(ran)
   }
 
-  test("knnJoinAuto: route flips at the hier threshold, both routes exact at exhaustive settings") {
-    val h = Ann.buildIvfHierarchical(emb.select($"vec_id", $"embedding"),
-      "embedding", k = 64)
-    val queries = emb.filter($"vec_id" < 5)
-      .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-    val k = h.index.centers.length
-    // centers.length <= threshold -> flat ranking (no two-level cell stage)
-    val flatRouted = Ann.knnJoinAuto(h, "embedding", "vec_id", queries,
-      "qid", "qvec", topK = 5, nprobe = k, hierThreshold = k)
-    // centers.length > threshold -> two-level ranking (__graft_cell stage)
-    val hierRouted = Ann.knnJoinAuto(h, "embedding", "vec_id", queries,
-      "qid", "qvec", topK = 5, nprobe = k, nprobeCoarse = h.k1,
-      hierThreshold = k - 1)
-    def plan(df: org.apache.spark.sql.DataFrame) =
-      df.queryExecution.optimizedPlan.toString
-    assert(!plan(flatRouted).contains("__graft_cell"),
-      "flat route unexpectedly ranks through the coarse cell stage")
-    assert(plan(hierRouted).contains("__graft_cell"),
-      "hier route did not rank through the coarse cell stage")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getInt(3), r.getLong(1))).toSet
-    val a = rows(flatRouted); val b = rows(hierRouted)
-    assert(a === b && a.size === 25)
-  }
-
   test("knnJoinIvfHier: past the size bound the sub-center table is NOT broadcast") {
     import org.apache.spark.sql.functions.col
     val h = Ann.buildIvfHierarchical(emb.select($"vec_id", $"embedding"),
@@ -497,23 +472,18 @@ class AnnSpec extends SparkTestBase {
       s"pq=$viaPq float=$viaFloat")
   }
 
-  test("PQ index + codebook persist and reload: searches equal in-memory") {
+  test("PQ index persists and reloads: searches equal the in-memory index") {
     import org.apache.spark.sql.functions.col
     val cb = Ann.fitPq(emb, "embedding", m = 8)
     val index = Ann.withPq(Ann.buildIvf(emb, "embedding", k = 8), "embedding", cb)
     val path = java.nio.file.Files.createTempDirectory("ivfpq").toString
     Ann.persistIvf(index, path) // pqcode column rides along
-    Ann.persistPq(cb, spark, path)
     val loadedIdx = Ann.loadIvf(spark, path)
-    val loadedCb = Ann.loadPq(spark, path)
-    assert(loadedCb.m === cb.m)
-    assert(loadedCb.centers.map(_.map(_.toSeq).toSeq).toSeq
-      === cb.centers.map(_.map(_.toSeq).toSeq).toSeq)
     val a = Ann.searchIvf(index, "embedding", query, topK = 5,
         nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     val b = Ann.searchIvf(loadedIdx, "embedding", query, topK = 5,
-        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(loadedCb, rescore = 50))
+        nprobe = 3, tieBreak = Seq(col("vec_id")), codes = Ann.Pq(cb, rescore = 50))
       .select("vec_id").collect().map(_.getLong(0)).toSeq
     assert(a === b)
   }

@@ -128,42 +128,6 @@ class BpeModelSpec extends AnyFunSuite {
     }
   }
 
-  test("the unk token cannot be forged: no learned symbol contains an interior space") {
-    // an ML-preprocessed corpus full of literal "<unk>" strings must
-    // not fuse a symbol equal to the reserved UnkToken
-    val table: Array[(String, Long)] = Array(
-      ("<unk>", 50L), ("x<unk>", 9L), ("<unk", 3L))
-    val m = Bpe.learnMerges(table, numMerges = 60)
-    // the pin: no LEARNED symbol equals the reserved token (asserting
-    // on the pre-filtered key set would be tautological)
-    assert(!m.merges.map { case (l, r) => l + r }.contains(Bpe.UnkToken))
-    assert(!m.baseChars.contains(Bpe.UnkToken))
-    val vocabSyms = m.vocab.keySet - Bpe.UnkToken
-    vocabSyms.foreach { s =>
-      val interior = s.dropRight(1) // at most one trailing sentinel space
-      assert(!interior.contains(' '), s"interior space in learned symbol '$s'")
-    }
-    assert(m.vocab(Bpe.UnkToken) === 0)
-  }
-
-  test("vocab ids stay dense when two merges produce the same symbol string") {
-    (1L to 200L).foreach { seed =>
-      val table = sample(tableGen, seed)
-      val m = Bpe.learnMerges(table, numMerges = 32)
-      val ids = m.vocab.values.toSeq.sorted
-      assert(ids === (0 until m.vocab.size), s"seed=$seed non-dense ids")
-    }
-    // directed duplicate-symbol case: hand-built ranks can't be fed to
-    // vocab (it derives from merges), so construct a model whose merge
-    // list contains a genuine duplicate product
-    val dup = Bpe.BpeModel(
-      IndexedSeq(("a", "b"), ("b", "c"), ("a", "bc"), ("ab", "c")),
-      0, 0, 0, IndexedSeq("a", "b", "c"))
-    val ids = dup.vocab.values.toSeq.sorted
-    assert(ids === (0 until dup.vocab.size))
-    assert(dup.vocab.contains("abc"))
-  }
-
   test("learned merges never cross word boundaries") {
     (1L to 100L).foreach { seed =>
       val table = sample(tableGen, seed)

@@ -22,6 +22,8 @@ class BpeSpec extends SparkTestBase {
     assert(m.merges(2) === (("est", Bpe.EndOfWord)))
     assert(m.merges(3) === (("l", "o")))
     assert(m.fittedWords === 4)
+    // the fit-time base alphabet of the toy corpus, sorted
+    assert(m.baseChars === "deilnorstw".map(_.toString))
   }
 
   test("encodeWord applies merges by rank and round-trips via detokenize") {
@@ -125,31 +127,6 @@ class BpeSpec extends SparkTestBase {
     assert(Bpe.detokenize(enc.toIndexedSeq) === "zebra")
   }
 
-  test("vocab ids: unk=0, deterministic layout, encodeIds maps unseen chars to unk") {
-    val m = Bpe.learnMerges(toyCounts, numMerges = 4)
-    // layout: unk, then sorted base alphabet + sentinel, then merges
-    assert(m.vocab(Bpe.UnkToken) === 0)
-    val base = (m.baseChars.toSet + Bpe.EndOfWord).toSeq.sorted
-    base.zipWithIndex.foreach { case (s, i) => assert(m.vocab(s) === i + 1) }
-    m.merges.zipWithIndex.foreach { case ((l, r), i) =>
-      assert(m.vocab(l + r) === 1 + base.length + i)
-    }
-    // the toy corpus alphabet: d e i l n o r s t w
-    assert(m.baseChars === "deilnorstw".map(_.toString))
-    val docs = Seq((1L, "newest zq"), (2L, "")).toDF("doc_id", "text")
-    val ids = Bpe.encodeDocIds(docs, "doc_id", "text", m)
-      .as[(Long, Seq[Int])].collect().toMap
-    assert(ids(2L).isEmpty)
-    // "zq" has two unseen chars -> [0, 0, id(</w>)]
-    val tail = ids(1L).takeRight(3)
-    assert(tail.take(2) === Seq(0, 0))
-    assert(tail(2) === m.vocab(Bpe.EndOfWord))
-    // every id decodes back through the inverted vocab ("newest" part
-    // has no unks, so joint round-trip works up to the unk chars)
-    val inv = m.vocab.map(_.swap)
-    assert(ids(1L).forall(inv.contains))
-  }
-
   test("save/load round-trips the model; corrupted rank tables fail loudly") {
     val docs = sfDocs()
     val m = Bpe.train(docs, "text", numMerges = 96, maxWords = 4096)
@@ -160,7 +137,6 @@ class BpeSpec extends SparkTestBase {
     assert(back.distinctWords === m.distinctWords)
     assert(back.fittedWords === m.fittedWords)
     assert(back.baseChars === m.baseChars)
-    assert(back.vocab === m.vocab)
     // the reloaded model encodes identically
     val a = Bpe.tokenCounts(docs, "doc_id", "text", m).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap

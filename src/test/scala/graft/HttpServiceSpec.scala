@@ -46,10 +46,11 @@ class HttpServiceSpec extends SparkTestBase {
   }
 
   test("db/execute + db/query: the three-verb statement language over HTTP") {
-    val r = post("/db/execute", """["SET a hello world", "SET b tmp", "DELETE b"]""")
+    val r = post("/db/execute",
+      """["SET a hello world", "SET b tmp", "DELETE b", "SET <k&> a<b>&c"]""")
     assert(r.statusCode() === 200)
     val results = mapper.readTree(r.body()).get("results")
-    assert(results.size() === 3)
+    assert(results.size() === 4)
     assert(results.get(0).get("rows_affected").asLong() === 1L)
     assert(results.get(2).get("rows_affected").asLong() === 1L) // DELETE idempotent
 
@@ -63,10 +64,23 @@ class HttpServiceSpec extends SparkTestBase {
     val miss = mapper.readTree(get("/db/query?q=GET%20b").body())
       .get("results").get(0)
     assert(miss.get("values").size() === 0)
+    // no HTML escaping (json.go:231-239): <, > and & reach the wire
+    // as themselves, never as \u003c-style escapes
+    val html = get("/db/query?q=GET%20%3Ck%26%3E").body()
+    assert(html.contains("\"<k&>\"") && html.contains("\"a<b>&c\""), html)
     // a write verb in query is rejected
     assert(get("/db/query?q=SET%20x%20y").statusCode() === 400)
     // malformed statement in execute is a 400, not a 500
     assert(post("/db/execute", """["FROB x"]""").statusCode() === 400)
+    // a parsed statement that fails reports its error alone: no
+    // rows_affected for a write that never happened
+    val mixed = post("/db/execute", """["SET a 1", "GET a"]""")
+    assert(mixed.statusCode() === 200)
+    val mr = mapper.readTree(mixed.body()).get("results")
+    assert(mr.size() === 2 && mr.get(0).get("rows_affected").asLong() === 1L)
+    assert(mr.get(0).get("error") === null)
+    assert(mr.get(1).get("error").asText() === "GET not valid in execute")
+    assert(mr.get(1).size() === 1, mr.get(1).toString)
   }
 
   test("db/backup streams an NDJSON dump; db/load restores it (replace) or merges") {
@@ -147,7 +161,7 @@ class HttpServiceSpec extends SparkTestBase {
     assert(created.statusCode() === 200)
     assert(mapper.readTree(created.body()).get("success").asBoolean())
 
-    assert(engine.activeKeys.contains("hp1"))
+    assert(engine.status().contains("hp1"))
     spark.streams.active.foreach(_.processAllAvailable())
 
     val stResp = get("/status")
@@ -180,7 +194,7 @@ class HttpServiceSpec extends SparkTestBase {
     assert(post("/connector/hb1?mode=batch", body).statusCode() === 200)
     assert(spark.read.text(out).count() === 1)
     // batch pipelines don't register as running
-    assert(!engine.activeKeys.contains("hb1"))
+    assert(!engine.status().contains("hb1"))
   }
 
   test("error paths: empty body 400, bad payload 400, unknown route 404") {

@@ -13,20 +13,6 @@ class MultimodalSpec extends SparkTestBase {
     (3L, Array.emptyByteArray))
     .toDF("media_id", "media")
 
-  test("extractFeatures: deterministic, partition-local, right shape") {
-    val f1 = Multimodal.extractFeatures(media()).collect().sortBy(_.media_id)
-    val f2 = Multimodal.extractFeatures(media().repartition(3))
-      .collect().sortBy(_.media_id)
-    assert(f1.map(_.content_hash).toSeq === f2.map(_.content_hash).toSeq)
-    assert(f1.forall(_.feature.length === 8))
-    assert(f1(0).n_bytes === 21)
-    assert(f1(2).n_bytes === 0) // empty media tolerated
-    // no shuffle: plan has no Exchange
-    val plan = Multimodal.extractFeatures(media())
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"))
-  }
-
   test("resizeMeta preserves aspect ratio and never upscales") {
     val df = Seq((1920, 1080), (100, 50), (640, 4800)).toDF("fake_width", "fake_height")
     val got = Multimodal.resizeMeta(df, 640, 480).collect()
@@ -597,39 +583,6 @@ class MultimodalSpec extends SparkTestBase {
     val got = ds.collect().sortBy(_.media_id)
     assert(got(0).resampled && got(0).out_rate === 16000)
     assert(!got(1).resampled)
-    assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"))
-  }
-
-  test("decodeAudioWindows: window boundaries, tail window, per-window stats") {
-    // 2500 frames @ window 1000: windows of 1000/1000/500
-    val n = 2500
-    val samples = new Array[Short](n)
-    // first 1000 frames silence, rest a 0.5-amp 250 Hz tone @ 8 kHz
-    (1000 until n).foreach { i =>
-      samples(i) = (0.5 * 32767 * math.sin(2 * math.Pi * 250 * i / 8000)).toShort
-    }
-    val wavBytes = Multimodal.pcm16Wav(samples, 8000, 1)
-    val w = Multimodal.decodeAudioWindows(9L, wavBytes, 1000).toArray
-    assert(w.length === 3)
-    assert(w.map(_.window_no).toSeq === Seq(0, 1, 2))
-    assert(w.map(_.start_frame).toSeq === Seq(0L, 1000L, 2000L))
-    assert(w.map(_.n_frames).toSeq === Seq(1000L, 1000L, 500L))
-    assert(w(0).rms < 1e-6, "silent window")
-    assert(math.abs(w(1).rms - 0.5 / math.sqrt(2)) < 1e-2, s"tone window rms=${w(1).rms}")
-    assert(math.abs(w(1).zcr - 2.0 * 250 / 8000) < 2e-3)
-    assert(math.abs(w(2).rms - 0.5 / math.sqrt(2)) < 1e-2, "tail window")
-    // undecodable bytes explode to nothing
-    assert(Multimodal.decodeAudioWindows(10L, "junk".getBytes("UTF-8"), 100).isEmpty)
-  }
-
-  test("audioWindows: distributed row explosion, no shuffle") {
-    val rows = Seq(
-      (1L, Multimodal.sineWav(440.0, 8000, 2048)),
-      (2L, "noise".getBytes("UTF-8"))).toDF("media_id", "media")
-    val ds = Multimodal.audioWindows(rows, 512)
-    val got = ds.collect().sortBy(w => (w.media_id, w.window_no))
-    assert(got.length === 4 && got.forall(_.media_id == 1L))
-    assert(got.forall(_.n_frames == 512L))
     assert(!ds.queryExecution.executedPlan.toString.contains("Exchange"))
   }
 

@@ -85,43 +85,6 @@ class StatefulStreamingSpec extends SparkTestBase {
     }
   }
 
-  test("stateful KV with TTL: idle keys expire with a retraction (roadmap state TTL)") {
-    val dir = tmp()
-    Files.write(Paths.get(dir, "b0.jsonl"), java.util.List.of(
-      """{"key":"ttl_a","op":"set","value":"1","seq":1}"""))
-    val ops = spark.readStream.text(dir).select(
-      get_json_object($"value", "$.key").as("key"),
-      get_json_object($"value", "$.op").as("op"),
-      get_json_object($"value", "$.value").as("value"),
-      get_json_object($"value", "$.seq").cast("long").as("seq")).as[KvOp]
-    val updates = StatefulKv.materializeWithTtl(spark, ops, ttlMs = 500)
-    // ProcessingTimeTimeout keeps shouldRunAnotherBatch=true (timers can
-    // fire any time), so noNewData is never signalled and
-    // processAllAvailable() would block forever — poll the sink with a
-    // deadline instead, and use a real trigger so the timeout batches
-    // tick rather than busy-loop.
-    val q = updates.writeStream.format("memory").queryName("kv_ttl_updates")
-      .outputMode("append").option("checkpointLocation", tmp() + "/ck")
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(100))
-      .start()
-    def rows: Seq[(String, String, Boolean)] =
-      spark.table("kv_ttl_updates").as[(String, String, Boolean)].collect().toSeq
-    def await(what: String)(pred: Seq[(String, String, Boolean)] => Boolean): Unit = {
-      val deadline = System.currentTimeMillis() + 60000
-      while (!pred(rows) && System.currentTimeMillis() < deadline) Thread.sleep(100)
-      assert(pred(rows), s"$what; got $rows")
-    }
-    await("initial set visible")(_.contains(("ttl_a", "1", true)))
-    // past the TTL the no-data timeout batches fire the timer on their
-    // own: state drops and the expiry retraction is emitted
-    await("expiry retraction for idle key")(_.contains(("ttl_a", null, false)))
-    // a later write to a DIFFERENT key stays live while ttl_a is gone
-    Files.write(Paths.get(dir, "b1.jsonl"), java.util.List.of(
-      """{"key":"ttl_b","op":"set","value":"x","seq":2}"""))
-    await("fresh key live after the other expired")(_.contains(("ttl_b", "x", true)))
-    q.stop()
-  }
-
   test("stream-stream join with watermarks (roadmap 'JOIN across streams')") {
     val dirL = tmp(); val dirR = tmp()
     Files.write(Paths.get(dirL, "l.jsonl"), java.util.List.of(

@@ -31,66 +31,9 @@ class StreamingSpec extends SparkTestBase {
     // NB: reading the sink ROOT would consult the streaming commit log
     // (_spark_metadata) and hide the batch-appended bootstrap file; the
     // glob bypasses the log. Real deployments should bootstrap through
-    // the stream source dir instead (Streaming.snapshotThenTail doc).
+    // the stream source dir instead (`load_initial_data`, Sources).
     val lines = spark.read.text(s"$outDir/part*").as[String].collect().toSet
     assert(lines === Set("""{"k":"s1"}""", """{"k":"t1"}""", """{"k":"t2"}"""))
-  }
-
-  test("CDC latest-per-key with watermark (S1): dropDuplicatesWithinWatermark") {
-    val dir = tmp()
-    val rows = Seq(
-      """{"document_key":"d1","operation_type":"insert","cluster_time":"2024-01-01T00:00:00Z"}""",
-      """{"document_key":"d1","operation_type":"update","cluster_time":"2024-01-01T00:01:00Z"}""",
-      """{"document_key":"d2","operation_type":"insert","cluster_time":"2024-01-01T00:02:00Z"}""")
-    Files.write(Paths.get(dir, "cdc.jsonl"), scala.jdk.CollectionConverters
-      .SeqHasAsJava(rows).asJava)
-    val stream = spark.readStream.text(dir)
-      .select(
-        get_json_object($"value", "$.document_key").as("document_key"),
-        get_json_object($"value", "$.operation_type").as("operation_type"),
-        to_timestamp(get_json_object($"value", "$.cluster_time"),
-          "yyyy-MM-dd'T'HH:mm:ss'Z'").as("cluster_time"))
-    val dedup = Streaming.cdcLatest(stream, "document_key", "cluster_time")
-    val q = dedup.writeStream.format("memory").queryName("cdc_out")
-      .outputMode("append").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("cdc_out").collect()
-    // first-seen per key within the watermark window survives
-    assert(got.map(_.getString(0)).sorted === Array("d1", "d2"))
-  }
-
-  test("tumbling window counts with watermark") {
-    val dir = tmp()
-    val rows = (0 until 10).map(i =>
-      s"""{"et":"2024-01-01T0${i / 5}:0$i:00Z","t":"a"}""")
-    Files.write(Paths.get(dir, "ev.jsonl"),
-      scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava)
-    val stream = spark.readStream.text(dir).select(
-      to_timestamp(get_json_object($"value", "$.et"),
-        "yyyy-MM-dd'T'HH:mm:ss'Z'").as("ts"),
-      get_json_object($"value", "$.t").as("t"))
-    val agg = Streaming.tumblingCounts(stream, "ts", "1 hour", "10 minutes", $"t")
-    val q = agg.writeStream.format("memory").queryName("tumbling_out")
-      .outputMode("complete").start()
-    q.processAllAvailable(); q.stop()
-    val got = spark.table("tumbling_out")
-      .select($"window.start".cast("string"), $"n").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got === Map(
-      "2024-01-01 00:00:00" -> 5L,
-      "2024-01-01 01:00:00" -> 5L))
-  }
-
-  test("queued writes (Q10): micro-batches carry a sequence number") {
-    val dir = tmp()
-    Files.write(Paths.get(dir, "a.jsonl"), java.util.List.of("""{"x":1}"""))
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val stream = spark.readStream.text(dir)
-    val q = Streaming.queuedWrites(stream, 50) { (batch, id) =>
-      if (batch.count() > 0) seen.add(id)
-    }.option("checkpointLocation", tmp() + "/ck").start()
-    q.processAllAvailable(); q.stop()
-    assert(seen.size() >= 1) // batchId = the reference's sequence_number
   }
 
   test("engine: streaming pipeline create/status/delete lifecycle (C1/C2/C4)") {
@@ -163,9 +106,10 @@ class StreamingSpec extends SparkTestBase {
   test("IVF append twin: streaming frozen-center appends == the full batch assignment") {
     // incremental index maintenance end-to-end: persist an index built
     // on half the vectors, stream the other half through
-    // appendToIvfStream (foreachBatch appends — no _spark_metadata in
-    // the index dir), reload, and the assignment must equal one batch
-    // assignment of ALL rows under the frozen centers
+    // idempotentForeachBatch + appendToIvf (foreachBatch appends — no
+    // _spark_metadata in the index dir), reload, and the assignment
+    // must equal one batch assignment of ALL rows under the frozen
+    // centers
     val emb = spark.read.parquet(sf("sf0.001") + "/embeddings.parquet")
     val first = emb.filter($"vec_id" < 500)
     val index = graft.ops.Ann.buildIvf(first, "embedding", k = 8)
@@ -175,8 +119,9 @@ class StreamingSpec extends SparkTestBase {
     emb.filter($"vec_id" >= 500).write.mode("overwrite").parquet(feed)
     val schema = spark.read.parquet(feed).schema
     val stream = spark.readStream.schema(schema).parquet(feed)
-    val q = graft.ops.Ann.appendToIvfStream(index, stream, "embedding", path)
-      .option("checkpointLocation", tmp())
+    val q = graft.ops.Ann.idempotentForeachBatch(stream, path, "") { b =>
+        graft.ops.Ann.appendToIvf(index, b, "embedding", path)
+      }.option("checkpointLocation", tmp())
       .start()
     q.processAllAvailable(); q.stop()
     val loaded = graft.ops.Ann.loadIvf(spark, path)
@@ -202,8 +147,9 @@ class StreamingSpec extends SparkTestBase {
     emb.filter($"vec_id" >= 500).write.mode("overwrite").parquet(feed)
     val stream = spark.readStream
       .schema(spark.read.parquet(feed).schema).parquet(feed)
-    val q = graft.ops.Ann.appendToIvfStream(h, stream, "embedding", path)
-      .option("checkpointLocation", tmp())
+    val q = graft.ops.Ann.idempotentForeachBatch(stream, path, "") { b =>
+        graft.ops.Ann.appendToIvf(h, b, "embedding", path)
+      }.option("checkpointLocation", tmp())
       .start()
     q.processAllAvailable(); q.stop()
     val loaded = graft.ops.Ann.loadIvfHier(spark, path)
@@ -238,7 +184,9 @@ class StreamingSpec extends SparkTestBase {
     assert(batch.nonEmpty && streamed === batch)
   }
 
-  test("knnJoinIvfStream: streamed queries == batch join; a same-token rerun never duplicates") {
+  test("streamed k-NN join == batch join; a same-token rerun never duplicates") {
+    // queries stream through the run-scoped marker shell, each
+    // micro-batch joined against the frozen index with knnJoinIvf
     val dir = tmp()
     Files.copy(Paths.get(sf("sf0.001"), "embeddings.parquet"),
       Paths.get(dir, "embeddings.parquet"))
@@ -249,10 +197,11 @@ class StreamingSpec extends SparkTestBase {
       val stream = spark.readStream.schema(emb.schema).parquet(dir)
         .filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qvec"))
-      val q = graft.streaming.Streaming.knnJoinIvfStream(
-        idx, "embedding", "vec_id", stream, "qid", "qvec",
-        topK = 3, nprobe = 8, excludeSelf = true, outPath = out,
-        runToken = "spec-run").start()
+      val q = graft.ops.Ann.idempotentForeachBatch(stream, out, "spec-run") { batch =>
+        graft.ops.Ann.knnJoinIvf(idx, "embedding", "vec_id", batch,
+            "qid", "qvec", topK = 3, nprobe = 8, excludeSelf = true)
+          .write.mode("append").parquet(s"$out/results")
+      }.start()
       q.processAllAvailable(); q.stop()
     }
     runOnce()

@@ -25,29 +25,51 @@ import sys
 EXTS = (".scala", ".java")
 
 
-def classify(text):
-    """Return (code_lines, comment_lines, total_lines) for one source."""
+def lex(text):
+    """Split one source into lines and mark what each character is.
+
+    Returns one (code, bare, is_code, is_comment) tuple per line:
+      - code: the line with every comment character blanked to a space;
+      - bare: `code` with the contents of string and character literals
+        blanked too (their quotes stay), so braces and words inside
+        literals do not look like program text;
+      - is_code / is_comment: the per-line flags of the counting rule.
+    Both strings keep the line's length, so columns line up.
+    """
     lines = text.split("\n")
     if lines and lines[-1] == "":
         lines.pop()  # a trailing newline does not start another line
-    code = [False] * len(lines)
-    comment = [False] * len(lines)
+    out = []
     depth = 0  # block-comment nesting depth
     in_triple = False  # inside a """...""" literal (spans lines)
-    for ln, line in enumerate(lines):
-        i, n = 0, len(line)
+    for line in lines:
+        n = len(line)
+        code = list(line)
+        bare = list(line)
+        is_code = is_comment = False
+
+        def blank(a, b, both=True):
+            for k in range(a, min(b, n)):
+                bare[k] = " "
+                if both:
+                    code[k] = " "
+
+        i = 0
         while i < n:
             c = line[i]
             if depth > 0:
                 if not c.isspace():
-                    comment[ln] = True
+                    is_comment = True
                 if line.startswith("*/", i):
                     depth -= 1
+                    blank(i, i + 2)
                     i += 2
                 elif line.startswith("/*", i):
                     depth += 1
+                    blank(i, i + 2)
                     i += 2
                 else:
+                    blank(i, i + 1)
                     i += 1
                 continue
             if in_triple:
@@ -56,45 +78,62 @@ def classify(text):
                     j = i
                     while j < n and line[j] == '"':
                         j += 1
+                    blank(i, j - 3, both=False)
                     in_triple = False
                     i = j
                 else:
+                    blank(i, i + 1, both=False)
                     i += 1
-                code[ln] = True
+                is_code = True
                 continue
             if c.isspace():
                 i += 1
             elif line.startswith("//", i):
-                comment[ln] = True
+                is_comment = True
+                blank(i, n)
                 break
             elif line.startswith("/*", i):
-                comment[ln] = True
+                is_comment = True
                 depth = 1
+                blank(i, i + 2)
                 i += 2
             elif line.startswith('"""', i):
-                code[ln] = True
+                is_code = True
                 in_triple = True
                 i += 3
             elif c == '"':
-                code[ln] = True
+                is_code = True
                 i += 1
+                j = i
                 while i < n and line[i] != '"':
                     i += 2 if line[i] == "\\" else 1
+                blank(j, i, both=False)
                 i += 1
             elif c == "'":
-                code[ln] = True
+                is_code = True
                 if i + 1 < n and line[i + 1] == "\\":
                     end = line.find("'", i + 2)
-                    i = n if end < 0 else end + 1
+                    end = n if end < 0 else end
+                    blank(i + 1, end, both=False)
+                    i = end + 1
                 elif i + 2 < n and line[i + 2] == "'":
+                    blank(i + 1, i + 2, both=False)
                     i += 3
                 else:
                     i += 1  # a Scala symbol or a lone quote
             else:
-                code[ln] = True
+                is_code = True
                 i += 1
-    n_code = sum(code)
-    n_comment = sum(1 for k in range(len(lines)) if comment[k] and not code[k])
+        out.append(("".join(code), "".join(bare), is_code, is_comment))
+    return out
+
+
+def classify(text):
+    """Return (code_lines, comment_lines, total_lines) for one source."""
+    lines = lex(text)
+    n_code = sum(1 for _, _, is_code, _ in lines if is_code)
+    n_comment = sum(1 for _, _, is_code, is_comment in lines
+                    if is_comment and not is_code)
     return n_code, n_comment, len(lines)
 
 
